@@ -43,17 +43,16 @@ object Pipeline {
     * micro-batch merges into the state table with upsert semantics —
     * idempotent, so at-least-once delivery is exactly-once in the table. */
   def start(spark: SparkSession, cfg: Config): StreamingQuery = {
-    // full load (transfer.py equivalent): seed the state table
+    // full load (transfer.py equivalent): seed the state table with the
+    // snapshot columns at their declared types — a seed missing one fails
+    // here, at start, not later as nulls in a declared-schema read
     val seed = cfg.fullLoadFrom match {
-      case Some(snapshot) => snapshot
+      case Some(snapshot) =>
+        snapshot.select(TableSink.snapshotSchema.fields.toSeq
+          .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
       case None =>
         spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("last_value", org.apache.spark.sql.types.DoubleType),
-            org.apache.spark.sql.types.StructField("updated_at", org.apache.spark.sql.types.TimestampType),
-            org.apache.spark.sql.types.StructField("n_changes", org.apache.spark.sql.types.LongType))))
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], TableSink.snapshotSchema)
     }
     // Seed only on first start: a restart from checkpoint must keep the
     // existing state (the stream will deliver only unprocessed files).

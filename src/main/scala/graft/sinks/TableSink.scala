@@ -1,22 +1,40 @@
 package graft.sinks
 
 import graft.cdc.Materialize
+import graft.dec
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** File-backed table sink with the reference's JDBC-sink apply semantics
   * (reference: backend/ingestion/sink_config.py — insert.mode=upsert,
   * delete.enabled, pk.mode=record_key), expressed as parquet state.
   *
-  * Scale notes: the snapshot is written hash-distributed by PK so a later
-  * upsert merge co-partitions without a sort; the merge itself is one
-  * shuffle by PK. Against a warehouse this maps to `df.write.jdbc` or a
-  * MERGE INTO on a lakehouse table — the changelog algebra is identical.
+  * Cost model of an [[upsert]]: only the keys the increment touches go
+  * through a shuffle, so shuffle bytes are proportional to the increment,
+  * not to the state. The untouched rest of the state streams through one
+  * narrow scan-and-rewrite of the state files (no exchange, no sort).
+  * Reads declare the state schema, so neither an apply nor a live read pays
+  * a Parquet schema-inference job. Against a warehouse this maps to
+  * `df.write.jdbc` or a MERGE INTO on a lakehouse table — the changelog
+  * algebra is identical.
   */
 object TableSink {
 
-  /** Full-load snapshot write (transfer.py equivalent): hash-distributed
-    * by key for later co-partitioned merges. */
+  /** The columns of a full-load snapshot, which every state table has. */
+  val snapshotSchema: StructType = StructType(Seq(
+    StructField("user_id", LongType), StructField("last_value", DoubleType),
+    StructField("updated_at", TimestampType), StructField("n_changes", LongType)))
+
+  /** The declared schema of a stored state table: the snapshot columns
+    * plus the watermark and tombstone columns [[upsert]] adds. A
+    * snapshot-seeded state reads its missing `max_seq` and `is_deleted` as
+    * null; [[readState]] maps them to "nothing applied yet" and "live". */
+  private val stateSchema: StructType =
+    snapshotSchema.add("max_seq", LongType).add("is_deleted", BooleanType)
+
+  /** Full-load snapshot write (transfer.py equivalent): `nBuckets` evenly
+    * sized files, written in parallel. */
   def writeSnapshot(df: DataFrame, keyCol: String, path: String, nBuckets: Int = 32): Unit =
     df.repartition(nBuckets, col(keyCol))
       .write.mode(SaveMode.Overwrite).parquet(path)
@@ -42,39 +60,44 @@ object TableSink {
     * (ts,seq)-disordered keys. Tombstone retention is bounded by deleted
     * key cardinality; reclaim space offline with the `cdc_tombstone_gc`
     * policy (drop tombstones older than every replayable source offset),
-    * like any compacted-topic retention. */
-  def upsert(spark: SparkSession, path: String, changes: DataFrame, nBuckets: Int = 32): DataFrame = {
-    val raw = readState(spark, path)
-    // snapshot-seeded state (writeSnapshot of a plain materialization)
-    // predates the watermark/tombstone columns: treat as "nothing
-    // applied yet", all rows live
-    val state0 =
-      if (raw.columns.contains("max_seq")) raw
-      else raw.withColumn("max_seq", lit(Long.MinValue))
-    val state =
-      if (state0.columns.contains("is_deleted")) state0
-      else state0.withColumn("is_deleted", lit(false))
-    val existing = state
+    * like any compacted-topic retention.
+    *
+    * Touched-keys merge: the increment's distinct keys are broadcast and
+    * split the state (null-safe, so a null key merges with a stored null
+    * key as a group-by would) into touched and untouched rows. Only the
+    * touched rows ∪ the increment are replay-filtered and merged; the
+    * untouched rows are written back through the merge's own output
+    * projection, so every stored column is what a whole-state merge would
+    * have written. */
+  def upsert(spark: SparkSession, path: String, changes: DataFrame): DataFrame = {
+    val increment = changes.select("pk", "op", "value", "ts", "seq")
+    val keys = broadcast(increment.select(col("pk").as("touched_pk")).distinct())
+    val state = readState(spark, path)
+    def split(how: String) = state.join(keys, state("user_id") <=> keys("touched_pk"), how)
+    val existing = split("left_semi")
       // stored state re-enters the merge carrying the per-key applied
       // watermark as its seq and the cumulative change count as its
       // weight; a tombstone re-enters as the delete it recorded, so the
       // merge keeps it dead unless a fresh, newer event revives the key
       .select(col("user_id").as("pk"),
         when(col("is_deleted"), lit("d")).otherwise(lit("c")).as("op"),
-        col("last_value").cast("double").as("value"),
+        col("last_value").as("value"),
         col("updated_at").as("ts"), col("max_seq").as("seq"),
         col("n_changes").as("weight"))
     // drop already-applied rows (micro-batch replay): anything at or
     // below the key's applied watermark contributed to the stored row
-    val fresh = changes.select("pk", "op", "value", "ts", "seq")
+    val fresh = increment
       .join(existing.select(col("pk"), col("seq").as("applied_seq")), Seq("pk"), "left")
       .where(col("applied_seq").isNull || col("seq") > col("applied_seq"))
       .drop("applied_seq")
     val merged = Materialize.latestStateWeighted(
       existing.unionByName(fresh.withColumn("weight", lit(1L))))
+    // a single stored row merged alone: latestStateWeighted's projection
+    val untouched = split("left_anti").select(
+      col("user_id"), dec(col("last_value"), 18, 2).cast("double").as("last_value"),
+      col("updated_at"), col("n_changes"), col("max_seq"), col("is_deleted"))
     val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    merged.repartition(nBuckets, col("user_id"))
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    merged.unionByName(untouched).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     // Crash-safe swap. Invariant: at EVERY instant at least one of
     // {dst, bak} holds a complete committed state, and every rename is
     // checked (Hadoop FileSystem.rename reports failure as `false`; an
@@ -101,15 +124,12 @@ object TableSink {
   }
 
   /** The live view of a state table: tombstone rows filtered out, helper
-    * column dropped — what the state looked like to every reader before
-    * tombstone retention, and what downstream consumers should read.
-    * Pre-tombstone tables (no `is_deleted` column) pass through as-is. */
-  def readLive(spark: SparkSession, path: String): DataFrame = {
-    val df = readState(spark, path)
-    if (df.columns.contains("is_deleted"))
-      df.where(!col("is_deleted")).drop("is_deleted")
-    else df
-  }
+    * column dropped — what downstream consumers should read. Columns:
+    * `user_id`, `last_value`, `updated_at`, `n_changes`, `max_seq`
+    * (`Long.MinValue` for rows of a snapshot-seeded state that no upsert
+    * has touched yet). */
+  def readLive(spark: SparkSession, path: String): DataFrame =
+    readState(spark, path).where(!col("is_deleted")).drop("is_deleted")
 
   /** True when recoverable state exists at `path` — either the live table
     * or the `.bak` left by a swap that crashed between its two renames.
@@ -122,13 +142,18 @@ object TableSink {
     fs.exists(live) || fs.exists(new org.apache.hadoop.fs.Path(path + ".bak"))
   }
 
-  /** Read the state table, falling back to the `.bak` left by a swap that
-    * crashed between its two renames. */
+  /** Read the state table with its declared schema, falling back to the
+    * `.bak` left by a swap that crashed between its two renames. */
   private def readState(spark: SparkSession, path: String): DataFrame = {
     val live = new org.apache.hadoop.fs.Path(path)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val src = if (fs.exists(live)) path else path + ".bak"
-    spark.read.parquet(src)
+    // snapshot-seeded state (writeSnapshot of a plain materialization)
+    // predates the watermark/tombstone columns: "nothing applied yet",
+    // all rows live
+    spark.read.schema(stateSchema).parquet(src)
+      .withColumn("max_seq", coalesce(col("max_seq"), lit(Long.MinValue)))
+      .withColumn("is_deleted", coalesce(col("is_deleted"), lit(false)))
   }
 
   /** Time-partitioned lake write (the reference's S3 sink with time-based

@@ -143,4 +143,26 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(state === expected)
   }
+
+  test("full-load seed is stored in the state columns; a seed missing one fails at start") {
+    import org.apache.spark.sql.functions._
+    val base = Files.createTempDirectory("pipelineseed").toString
+    // an empty wire: no micro-batch rewrites the seeded state
+    Files.createDirectories(java.nio.file.Path.of(s"$base/wire"))
+    val seed = spark.range(5).select(col("id").cast("int").as("user_id"),
+      (col("id") / 4).cast("decimal(10,2)").as("last_value"),
+      timestamp_millis(col("id")).as("updated_at"), lit(1L).as("n_changes"),
+      lit("extra").as("note"))
+    def cfg(state: String, from: org.apache.spark.sql.DataFrame) = Pipeline.Config(
+      wirePath = s"$base/wire", statePath = s"$base/$state",
+      checkpointPath = s"$base/ckpt-$state", fullLoadFrom = Some(from))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Pipeline.start(spark, cfg("bad", seed.drop("n_changes")))
+    }
+    assert(e.getMessage.contains("n_changes"))
+    assert(!TableSink.stateExists(spark, s"$base/bad"))
+
+    Pipeline.start(spark, cfg("good", seed)).stop()
+    assert(spark.read.parquet(s"$base/good").schema === TableSink.snapshotSchema)
+  }
 }

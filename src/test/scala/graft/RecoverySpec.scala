@@ -31,12 +31,9 @@ class RecoverySpec extends AnyFunSuite {
     Cdc.toWire(spark, dir).write.mode("append").json(wire)
 
     // seed the empty state table the way Pipeline.start does
-    import org.apache.spark.sql.types._
     TableSink.writeSnapshot(
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("user_id", LongType), StructField("last_value", DoubleType),
-          StructField("updated_at", TimestampType), StructField("n_changes", LongType)))),
+        TableSink.snapshotSchema),
       "user_id", state)
 
     // the apply body dies once, mid-stream, on the first micro-batch —
