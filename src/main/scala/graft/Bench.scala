@@ -31,15 +31,13 @@ object Bench {
     // absorbs codegen/JIT warmup for every query shape.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     require(passes >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $passes")
-    // Force the dedup family's memoized shared builds FIRST, each under its
-    // own attributed `shared:<name>` line: the per-query medians below then
+    // Force the memoized shared builds FIRST, each under its own
+    // attributed `shared:<name>` line: the per-query medians below then
     // measure marginal cost, and the one-time build cost stops hiding
     // inside whichever family member a pass happens to run first (r8's
     // pipe_dedup_waterfall 38.9 s cold pass).
     val shared: Vector[(String, Double)] =
-      (graft.dedup.Dedup.sharedBuilds ++
-        graft.multimodal.Decoded.sharedBuilds ++
-        graft.analytics.SketchGates.sharedBuilds).toVector.map { case (n, fn) =>
+      SharedBuilds.all.toVector.map { case (n, fn) =>
         val t0 = System.nanoTime()
         val t = try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()

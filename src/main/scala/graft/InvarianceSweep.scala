@@ -32,14 +32,12 @@ object InvarianceSweep {
       spark.conf.set("spark.sql.shuffle.partitions", partitions)
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
       // Evict every cached/memoized build before the layout runs — the
-      // dedup family memoizes .cache()'d intermediates per (session, dir),
+      // shared builds memoize .cache()'d intermediates per (session, dir),
       // and without this the later layouts would merely RE-READ blocks
       // materialized under the first layout, making their invariance
       // vacuous. With the eviction, every query re-executes its full plan
       // under this layout's confs.
-      graft.dedup.Dedup.clearMemos(spark)
-      graft.multimodal.Decoded.clearMemos(spark)
-      graft.analytics.SketchGates.clearMemos(spark)
+      SharedBuilds.clear(spark)
       spark.catalog.clearCache()
       names.map(n => n -> fingerprint(n)).toMap
     }

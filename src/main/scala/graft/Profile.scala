@@ -1,40 +1,54 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Per-query profiling harness: runs the named queries N times each and
-  * prints cold/warm timings, separating plan+codegen cost (first run) from
-  * steady-state execution — the signal Bench totals hide.
+/** Targeted profiling main: times the shared builds and a named subset of
+  * registered queries in one JVM, without paying a full registry bench.
   *
-  * Usage: runMain graft.Profile <sfDir> <reps> [query ...]
+  * Usage: runMain graft.Profile <sfDir> <passes> [query ...]
+  *
+  * Forces [[SharedBuilds.all]] first, each under a `shared:<name>` line
+  * (each line is its marginal cost over the lines before it, exactly as
+  * in Bench), then runs whole passes over the named queries (every
+  * registered query when none is named) in Bench's pass-major order and
+  * prints every pass with the heap in use after it. The closing table
+  * gives per query the cold (first) pass, the median, the min and every
+  * pass. With one query name the passes are back-to-back repeats: a
+  * monotone slope there means per-execution JVM degradation.
+  * `SPARK_GRAFT_CPUS` sets the local core count, as in Bench.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: Profile <sfDir> <passes> [query ...]")
     val sfDir = args(0)
-    val reps = args(1).toInt
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = Tables.scanConfs.foldLeft(b) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val passes = args(1).toInt
+    require(passes >= 1, s"passes must be >= 1, got $passes")
+    val names = if (args.length > 2) args.drop(2).toVector else SparkEntry.queries.keys.toVector
+    names.foreach(n => require(SparkEntry.queries.contains(n), s"unknown query: $n"))
+    val spark = Tables.localSession("graft-profile",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-
-    SparkEntry.queries
-      .filter { case (n, _) => only.isEmpty || only(n) }
-      .toSeq.sortBy(_._1)
-      .foreach { case (name, fn) =>
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          // same honest action as Bench: evaluate every output column
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"$name%-28s cold=${times.head}%6.2f warm_min=${times.tail.minOption.getOrElse(Double.NaN)}%6.2f all=${times.map(t => f"$t%.2f").mkString(",")}")
-      }
+    // same honest action as Bench: evaluate every output column
+    def time(run: => org.apache.spark.sql.DataFrame): Double = {
+      val t0 = System.nanoTime()
+      run.write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
+    SharedBuilds.all.foreach { case (n, fn) =>
+      println(f"shared:$n%-28s ${time(fn(spark, sfDir))}%.3f s")
+    }
+    val rt = Runtime.getRuntime
+    val timings = (1 to passes).map { pass =>
+      val ts = names.map(n => time(SparkEntry.queries(n)(spark, sfDir)))
+      val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
+      println(f"pass $pass%2d  ${ts.sum}%8.3f s  heap ${heapMb}M")
+      ts
+    }.transpose
+    println(f"${"query"}%-28s  cold  median     min  passes")
+    names.zip(timings).foreach { case (n, ts) =>
+      val sorted = ts.sorted
+      println(f"$n%-28s ${ts.head}%6.3f  ${sorted(sorted.length / 2)}%6.3f  ${sorted.head}%6.3f  " +
+        ts.map(t => f"$t%.2f").mkString(" "))
+    }
     spark.stop()
   }
 }

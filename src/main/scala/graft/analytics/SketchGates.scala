@@ -35,6 +35,8 @@ import org.apache.spark.sql.functions._
   */
 object SketchGates {
 
+  private val memos = new graft.SharedBuilds.Owner
+
   /** 0/1 verdict: |a − e| / max(|e|, floor) < tol. */
   private def within(a: Column, e: Column, tol: Double, floor: Double = 1.0): Column =
     (abs(a - e) / greatest(abs(e), lit(floor)) < tol).cast("long")
@@ -44,30 +46,19 @@ object SketchGates {
     * deliberately runs BOTH twins, so the registry paid the two exact
     * percentile passes — the heaviest per-row aggregate in the family —
     * twice per sweep, once in q_mad and again inside this gate). Same
-    * bounded-memo + attributed `shared:` accounting as the dedup corpus
-    * builds (Bench forces it before timing, so the gate's median measures
-    * its marginal cost: the sketch side plus a 3-row join). q_mad itself
-    * stays un-memoized — its bench line keeps measuring the exact
-    * computation. Within-session only; every fresh run recomputes from
-    * the parquet inputs. */
-  private val madExactCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
+    * bounded [[graft.SharedBuilds]] memo + attributed `shared:` accounting
+    * as the dedup corpus builds (Bench forces it before timing, so the
+    * gate's median measures its marginal cost: the sketch side plus a
+    * 3-row join). q_mad itself stays un-memoized — its bench line keeps
+    * measuring the exact computation. Within-session only; every fresh
+    * run recomputes from the parquet inputs. */
+  private val madExactCache = memos.frames()
   private[graft] def madExact(spark: SparkSession, dir: String): DataFrame =
-    madExactCache.getOrElse((spark, dir), {
-      madExactCache.keys.filter(k => k._1 eq spark).filter(_._2 != dir)
-        .foreach(k => madExactCache.remove(k).foreach(_.unpersist()))
-      val df = Relational.madByFlag(spark, dir).cache()
-      madExactCache.putIfAbsent((spark, dir), df) match {
-        case Some(existing) => df.unpersist(); existing
-        case None => df
-      }
-    })
+    madExactCache(spark, dir)(Relational.madByFlag(spark, dir))
 
   /** Evict for `spark` — InvarianceSweep calls this between layouts (same
     * contract as Dedup/Decoded.clearMemos). */
-  private[graft] def clearMemos(spark: SparkSession): Unit =
-    madExactCache.keys.filter(_._1 eq spark)
-      .foreach(k => madExactCache.remove(k).foreach(_.unpersist()))
+  private[graft] def clearMemos(spark: SparkSession): Unit = memos.clear(spark)
 
   /** Bench forces these under attributed `shared:` lines BEFORE timing the
     * registry (same contract as [[graft.dedup.Dedup.sharedBuilds]]). */

@@ -22,6 +22,10 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Dedup {
 
+  /** Every memoized build below is declared through this owner, so
+    * [[clearMemos]] evicts all of them. */
+  private val memos = new graft.SharedBuilds.Owner
+
   /** Mersenne prime 2^31-1: minhash arithmetic stays < 2^62 (no overflow
     * divergence between engines). */
   private val P = 2147483647L
@@ -32,13 +36,12 @@ object Dedup {
 
   /** Normalized corpus, cached once per (session, dir) — shared by the
     * whole dedup family so a multi-query run normalizes text once. Bounded
-    * by the same [[memo]] as the signature/pairs caches: admitting a new
-    * dir unpersists the old one, so a session sweeping many data dirs
-    * holds one dir's worth of executor storage, not all of them. */
-  private val normCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
+    * like every [[graft.SharedBuilds]] memo: admitting a new dir
+    * unpersists the old one, so a session sweeping many data dirs holds
+    * one dir's worth of executor storage, not all of them. */
+  private val normCache = memos.frames()
   def normCorpus(spark: SparkSession, dir: String): DataFrame =
-    memo(normCache, spark, dir)(
+    normCache(spark, dir)(
       corpus(spark, dir).withColumn("t", normText(col("text"))))
 
   def corpus(spark: SparkSession, dir: String): DataFrame = {
@@ -247,45 +250,14 @@ object Dedup {
 
   /** Verified candidate pairs (id_a, id_b, n_common, n_union, jaccard),
     * memoized per (session, dir) — [[minhashLsh]] and [[cluster]] share
-    * one build of the signature + band + verify pipeline. The memo assumes
-    * the files under `dir` are immutable for the session's lifetime (true
-    * for the test corpora); a mutable source would need invalidation. */
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
+    * one build of the signature + band + verify pipeline. */
+  private val pairsCache = memos.frames()
   def verifiedPairs(spark: SparkSession, dir: String): DataFrame =
-    memo(pairsCache, spark, dir)(buildVerifiedPairs(spark, dir))
+    pairsCache(spark, dir)(buildVerifiedPairs(spark, dir))
 
-  /** Bounded memo of cached DataFrames: admitting a new dir evicts (and
-    * unpersists) the session's entries for other dirs, so a long-lived
-    * session sweeping many data dirs (bench across scale factors) holds at
-    * most one dir's worth of executor storage per cache — not all of them
-    * forever. */
-  private def memo(
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame],
-      spark: SparkSession, dir: String)(build: => DataFrame): DataFrame =
-    cache.getOrElse((spark, dir), {
-      cache.keys.filter(k => k._1 eq spark).filter(_._2 != dir)
-        .foreach(k => cache.remove(k).foreach(_.unpersist()))
-      val df = build.cache()
-      cache.putIfAbsent((spark, dir), df) match {
-        case Some(existing) => df.unpersist(); existing
-        case None => df
-      }
-    })
-
-  /** Drop (and unpersist) every memoized build for `spark` — for harnesses
-    * that re-run the registry under a changed execution layout (shuffle
-    * partitions / AQE) on ONE session. Without this, the dedup family's
-    * cached normCorpus/signatures/pairs materialize once under the first
-    * layout and are merely re-read afterwards, so a layout-invariance
-    * sweep would be vacuous for exactly these queries
-    * (InvarianceSweep calls this between layouts). */
-  private[graft] def clearMemos(spark: SparkSession): Unit =
-    Seq(normCache, pairsCache, labelsCache, simhashFpCache, ngramBaseCache,
-      sigCache, containPairsCache).foreach { c =>
-      c.keys.filter(_._1 eq spark)
-        .foreach(k => c.remove(k).foreach(_.unpersist()))
-    }
+  /** Drop (and unpersist) every memoized build for `spark`, the
+    * containment scheme decision included (see [[graft.SharedBuilds.clear]]). */
+  private[graft] def clearMemos(spark: SparkSession): Unit = memos.clear(spark)
 
   /** MinHash + LSH: 16-permutation signature, 4 bands × 4 rows, candidate
     * pairs from band-bucket self-join, exact Jaccard verify on candidates
@@ -296,19 +268,15 @@ object Dedup {
       .select("id_a", "id_b", "n_common", "n_union", "jaccard")
       .orderBy("id_a", "id_b")
 
-  private val labelsCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val simhashFpCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val ngramBaseCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
+  private val labelsCache = memos.frames()
+  private val simhashFpCache = memos.frames()
+  private val ngramBaseCache = memos.frames()
 
   /** Cached (doc_id, sig0..15) signature table — shared by the pair
     * build and the estimator-accuracy operator. */
-  private val sigCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
+  private val sigCache = memos.frames()
   private[graft] def signatures(spark: SparkSession, dir: String): DataFrame =
-    memo(sigCache, spark, dir)(
+    sigCache(spark, dir)(
       sigsOf(normCorpus(spark, dir)
         .select(col("doc_id"), shingleCol(col("t")).as("shingles"))))
 
@@ -598,19 +566,14 @@ object Dedup {
     * flood the earlier single-signature banding paid (14.2M candidate
     * pairs over 6170 sf0.1 docs — 75% of ALL pairs — and a 62-80 s
     * verify; this form verifies only what the prefix filter admits). */
-  private val containPairsCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val containSchemeCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
+  private val containPairsCache = memos.frames()
+  private val containSchemeCache = memos.values[String]()
 
   /** Closed-form prefix-filter workload: Σ (df − 1) over every doc's
     * pigeonhole-prefix tokens of the k-shingle universe — the probe-hit
     * row count the prefix equi-join would produce, priced from ONE linear
     * pass (token explode + map-side df count + per-doc window), never a
     * materialized pair join. */
-  private def prefixWorkloadHits(spark: SparkSession, dir: String, k: Int): Long =
-    prefixWorkloadHitsOf(normCorpus(spark, dir), k)
-
   private[graft] def prefixWorkloadHitsOf(corpus: DataFrame, k: Int): Long = {
     val digests = corpus.select(col("doc_id"),
       array_distinct(transform(shingleColK(col("t"), k),
@@ -628,7 +591,8 @@ object Dedup {
 
   /** Data-chosen containment blocking (the [[blockingHealth]] decision
     * wired in): price the k=5 prefix filter's closed-form probe workload
-    * on THIS corpus against `budgetPerDoc`; within budget → the EXACT
+    * on THIS corpus against [[containmentSchemeOf]]'s per-doc budget
+    * (2048 probe hits); within budget → the EXACT
     * prefix path (lossless — the driver-gated default on every test
     * corpus: measured 74 hits/doc at sf0.01, 911 at sf0.1 vs the 2048
     * budget). Over budget — a closed-vocabulary corpus where every
@@ -642,10 +606,8 @@ object Dedup {
     * fall back to single-signature 16×1 minhash banding (recall
     * 1−(1−J)^16 ≈ 97 % at the J≈0.2 of a 20 %-prefix copy — the
     * approximate floor, never a quadratic one). */
-  private[graft] def containmentBlockingScheme(
-      spark: SparkSession, dir: String, budgetPerDoc: Long = 2048): String =
-    containSchemeCache.getOrElseUpdate((spark, dir),
-      containmentSchemeOf(normCorpus(spark, dir), budgetPerDoc))
+  private[graft] def containmentBlockingScheme(spark: SparkSession, dir: String): String =
+    containSchemeCache(spark, dir)(containmentSchemeOf(normCorpus(spark, dir)))
 
   /** The decision itself on an arbitrary normalized corpus (doc_id, t) —
     * ScaleSmoke drives this on synthetic closed-vocabulary corpora.
@@ -713,7 +675,7 @@ object Dedup {
     bandCandidateIds16x1Of(sigsOf(dfCappedShingles(corpus, dfCeiling)))
 
   private[graft] def containmentPairs(spark: SparkSession, dir: String): DataFrame =
-    memo(containPairsCache, spark, dir) {
+    containPairsCache(spark, dir) {
       containmentBlockingScheme(spark, dir) match {
         case "prefix_filter" => exactVerify(spark, dir, prefixCandidateIds(spark, dir, 5))
         case "prefix_k10"    => exactVerify(spark, dir, prefixCandidateIds(spark, dir, 10))
@@ -1063,22 +1025,18 @@ object Dedup {
     *
     * Scale shape: three linear explodes over memoized builds, each
     * collapsed by a map-side-combined aggregation; 3-row output. */
-  def blockingHealth(spark: SparkSession, dir: String): DataFrame =
-    // pinDigests (r19, guide §2.4): `toks` below is referenced TWICE (the
-    // dfreq rollup and the join's probe side), and Catalyst re-derives the
-    // shingle + md5-digest fan-out — the branch's dominant per-row cost —
-    // once per reference. Pinning the ≤|docs|-row digest-array table
-    // materializes that work once; the explode re-runs per reference but
-    // is cheap. Order-independence: every consumer aggregates or windows
-    // on explicit keys.
-    blockingHealthImpl(spark, dir, pinDigests = true)
-
-  private[graft] def blockingHealthImpl(
-      spark: SparkSession, dir: String, pinDigests: Boolean): DataFrame = {
-    val rawDigests = normCorpus(spark, dir).select(col("doc_id"),
+  def blockingHealth(spark: SparkSession, dir: String): DataFrame = {
+    // pinned (r19, guide §2.4; interleaved A/B 2.13 → 1.59 s at sf0.1):
+    // `toks` below is referenced TWICE (the dfreq rollup and the join's
+    // probe side), and Catalyst re-derives the shingle + md5-digest
+    // fan-out — the branch's dominant per-row cost — once per reference.
+    // Pinning the ≤|docs|-row digest-array table materializes that work
+    // once; the explode re-runs per reference but is cheap.
+    // Order-independence: every consumer aggregates or windows on
+    // explicit keys.
+    val digests = graft.Tables.pin(normCorpus(spark, dir).select(col("doc_id"),
       array_distinct(transform(shingleCol(col("t")),
-        s => conv(substring(md5(s), 1, 15), 16, 10).cast("long"))).as("sh"))
-    val digests = if (pinDigests) graft.Tables.pin(rawDigests) else rawDigests
+        s => conv(substring(md5(s), 1, 15), 16, 10).cast("long"))).as("sh")))
     val toks = digests.select(col("doc_id"), size(col("sh")).as("n"),
       explode(col("sh")).as("tok"))
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
@@ -1167,14 +1125,14 @@ object Dedup {
     * pairs via min-label propagation RUN TO FIXPOINT (the r11 default of
     * exactly 3 rounds silently under-merged any >3-hop chain — common in
     * crawl data where each scrape drifts a little; now a chain of any
-    * diameter converges, a diameter > maxRounds graph FAILS loudly, and
-    * the oracle is the same fixpoint via a recursive CTE). The canonical
+    * diameter converges, a diameter > 25 graph FAILS loudly, and the
+    * oracle is the same fixpoint via a recursive CTE). The canonical
     * survivor per cluster is its minimum doc id — the "keep one copy"
     * step of a dedup pipeline. [[clusterLargeStar]] remains the
     * O(log n)-round 100 TB path for high-diameter graphs; this per-round
     * O(diameter) form stays the default because LSH graphs are
     * small-diameter and each round here is one tiny broadcast join. */
-  def cluster(spark: SparkSession, dir: String, maxRounds: Int = 25): DataFrame = {
+  def cluster(spark: SparkSession, dir: String): DataFrame = {
     val pairs = verifiedPairs(spark, dir)
       .where(col("jaccard") >= 0.6).select(col("id_a"), col("id_b"))
     val edges = pairs
@@ -1182,11 +1140,8 @@ object Dedup {
     val ids = normCorpus(spark, dir).select(col("doc_id"))
     // bounded memo, not a bare cache: referenced twice below AND by
     // pipe_dedup_keep_best's second cluster() call; a raw .cache() here
-    // leaked one cached plan per invocation per dir (memo only admits the
-    // default-rounds build — a custom maxRounds value builds uncached)
-    val labels =
-      if (maxRounds == 25) memo(labelsCache, spark, dir)(propagateLabels(ids, edges, maxRounds))
-      else propagateLabels(ids, edges, maxRounds).cache()
+    // leaked one cached plan per invocation per dir
+    val labels = labelsCache(spark, dir)(propagateLabels(ids, edges))
     val sizes = labels.groupBy(col("label").as("canonical_id"))
       .agg(count(lit(1)).as("cluster_size"))
     labels.select(col("doc_id"), col("label").as("canonical_id"))
@@ -1466,7 +1421,7 @@ object Dedup {
   }
 
   def simhashFingerprints(spark: SparkSession, dir: String): DataFrame =
-    memo(simhashFpCache, spark, dir)(simhashFingerprintsOf(normCorpus(spark, dir)))
+    simhashFpCache(spark, dir)(simhashFingerprintsOf(normCorpus(spark, dir)))
     // memoized (bounded, unpersists on dir eviction): both self-join sides
 
   /** Banded candidate pairs over the fingerprints, BEFORE the Hamming
@@ -1857,7 +1812,7 @@ object Dedup {
         transform(sequence(lit(1), size(w) - 2),
           i => concat_ws(" ", element_at(w, i), element_at(w, i + 1), element_at(w, i + 2))))
         .otherwise(array(col("t"))))
-    memo(ngramBaseCache, spark, dir)(
+    ngramBaseCache(spark, dir)(
       normCorpus(spark, dir)
         .withColumn("w", split(col("t"), " "))
         .select(col("doc_id"), grams.as("grams")))
@@ -2147,13 +2102,7 @@ object Dedup {
 
   /** The algorithm itself over an arbitrary (id_a, id_b) edge list —
     * exposed so specs can feed adversarial shapes (long chains). */
-  private[graft] def clusterEdgesLargeStar(pairs: DataFrame, maxRounds: Int): DataFrame =
-    // lean = the r19 round shape (flags documented below); the un-lean
-    // body stays addressable for the interleaved A/B that justified it.
-    clusterEdgesLargeStarImpl(pairs, maxRounds, lean = true)
-
-  private[graft] def clusterEdgesLargeStarImpl(
-      pairs: DataFrame, maxRounds: Int, lean: Boolean): DataFrame = {
+  private[graft] def clusterEdgesLargeStar(pairs: DataFrame, maxRounds: Int): DataFrame = {
     // parent pointers as an edge relation (u, p); start from the raw
     // symmetric edges. Convergence: every node points at its component min.
     var edges = pairs
@@ -2166,14 +2115,14 @@ object Dedup {
     while (round < maxRounds && !converged) {
       // both stars read the SYMMETRIC neighborhood (the paper's map step
       // re-emits each edge in both directions every round).
-      // lean (r19, guide §2.4): NO distinct on sym — it is referenced
-      // three times per round and each reference re-paid the dedup
-      // shuffle. Duplicate (u, v) rows cannot change any consumer: minNbr
-      // and minSmall are min-aggregations, and the large/small outputs
-      // are distinct-ed in `next`. The per-node self-row distinct (1
-      // column, |V| rows) stays.
-      val symRaw = edges.unionAll(edges.select(col("v").as("u"), col("u").as("v")))
-      val sym = if (lean) symRaw else symRaw.distinct()
+      // NO distinct on sym (r19, guide §2.4; interleaved A/B with this
+      // and the one-job convergence below, dedup_cluster_lss 3.45 → 2.89 s
+      // at sf0.1): it is referenced three times per round and each
+      // reference re-paid the dedup shuffle. Duplicate (u, v) rows cannot
+      // change any consumer: minNbr and minSmall are min-aggregations, and
+      // the large/small outputs are distinct-ed in `next`. The per-node
+      // self-row distinct (1 column, |V| rows) stays.
+      val sym = edges.unionAll(edges.select(col("v").as("u"), col("u").as("v")))
       // large-star: for each u, attach every neighbor v > u to
       // min(neighbors(u) ∪ {u})
       val minNbr = sym.groupBy("u")
@@ -2191,18 +2140,15 @@ object Dedup {
         .select(col("v").as("u"), col("m").as("v"))
       val next = large.unionAll(small).where(col("u") =!= col("v")).distinct()
         .localCheckpoint(eager = true) // truncate the exponential lineage
-      // fixed point = the edge SET stopped changing. lean (r19): ONE
-      // action instead of two — both sides are distinct sets, so they are
-      // equal iff every (u, v) of their unionAll appears exactly twice
-      // (a row only in one side counts 1, and within one side each row is
-      // unique); the un-lean form paid a count job AND an except+isEmpty
-      // job per round. Exact either way (at lake scale swap for a
-      // monotone metric like count + Σ parent-id, avoiding the compare).
-      converged =
-        if (lean)
-          next.unionAll(edges).groupBy("u", "v").count()
-            .where(col("count") =!= 2L).isEmpty
-        else next.count() == edges.count() && next.except(edges).isEmpty
+      // fixed point = the edge SET stopped changing. ONE action per round
+      // (r19): both sides are distinct sets, so they are equal iff every
+      // (u, v) of their unionAll appears exactly twice (a row only in one
+      // side counts 1, and within one side each row is unique); the r18
+      // form paid a count job AND an except+isEmpty job per round. Exact
+      // (at lake scale swap for a monotone metric like count + Σ
+      // parent-id, avoiding the compare).
+      converged = next.unionAll(edges).groupBy("u", "v").count()
+        .where(col("count") =!= 2L).isEmpty
       edges = next
       round += 1
     }
@@ -2652,29 +2598,24 @@ object Dedup {
     *
     * Scale shape: a suffix array over 100 TB is a research project; the
     * gram lattice is two shuffles — occurrence multiplicity attached via
-    * a window PARTITIONED on the 16-byte gram digest (the corpus is
+    * a window PARTITIONED on the 60-bit gram digest (the corpus is
     * never re-paired and the shingle pipeline is built once — the same
     * linearization text_dup_gram_share uses), then the span merge as a
     * per-document ordered window. Both keys are high-cardinality and
     * skew-free by construction. */
-  def substringDup(spark: SparkSession, dir: String, gram: Int = 32): DataFrame =
-    substringDupImpl(spark, dir, gram, narrowDigest = true)
-
-  private[graft] def substringDupImpl(
-      spark: SparkSession, dir: String, gram: Int, narrowDigest: Boolean): DataFrame = {
+  def substringDup(spark: SparkSession, dir: String, gram: Int = 32): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
     val base = normCorpus(spark, dir)
       .select(col("doc_id"), col("t"), length(col("t")).as("len"))
       .where(col("len") >= gram)
-    // narrowDigest (r19, guide §2.3 "narrower types"): the occurrence
-    // window shuffles one row per character position, and the 32-char md5
-    // hex string was ~2/3 of every shuffled row; the 60-bit prefix (the
-    // same digest the novelty/shingle pipelines shuffle, same on the
-    // DuckDB side by construction, so collisions — none at any fixture
-    // scale — are shared) is 8 bytes and hashes/sorts as a long.
-    def ghOf(s: Column): Column =
-      if (narrowDigest) conv(substring(md5(s), 1, 15), 16, 10).cast("long")
-      else md5(s)
+    // 60-bit digest, not the md5 hex (r19, guide §2.3 "narrower types";
+    // interleaved A/B 2.26 → 1.67 s at sf0.1): the occurrence window
+    // shuffles one row per character position, and the 32-char md5 hex
+    // string was ~2/3 of every shuffled row; the 60-bit prefix (the same
+    // digest the novelty/shingle pipelines shuffle, same on the DuckDB
+    // side by construction, so collisions — none at any fixture scale —
+    // are shared) is 8 bytes and hashes/sorts as a long.
+    def ghOf(s: Column): Column = conv(substring(md5(s), 1, 15), 16, 10).cast("long")
     val occ = base
       .select(col("doc_id"), col("len"),
         explode(sequence(lit(1), col("len") - (gram - 1))).as("p"), col("t"))

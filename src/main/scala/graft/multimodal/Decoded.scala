@@ -16,9 +16,10 @@ import org.apache.spark.sql.types._
   * aggregate the downstream metrics read, materialized keyed by doc_id.
   *
   * [[images]] and [[audio]] are that pass, memoized per (session, dir)
-  * exactly like the dedup family's corpus builds (bounded memo, admitting
-  * a new dir evicts the old one; Bench forces each build under its own
-  * attributed `shared:` line; InvarianceSweep evicts via [[clearMemos]]).
+  * exactly like the dedup family's corpus builds (a bounded
+  * [[graft.SharedBuilds]] memo, admitting a new dir evicts the old one;
+  * Bench forces each build under its own attributed `shared:` line;
+  * InvarianceSweep evicts via [[clearMemos]]).
   * Each column is the SAME integer arithmetic the standalone operators
   * used — the DuckDB oracles are unchanged, so the correctness gate proves
   * the fused pass bit-matches the per-query decodes it replaced.
@@ -31,38 +32,16 @@ import org.apache.spark.sql.types._
   */
 object Decoded {
 
-  private val imgCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val audCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val vidCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val sceneCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
-  /** Same bounded-memo policy as Dedup: one dir's worth of executor
-    * storage per cache, newest dir wins. */
-  private def memo(
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame],
-      spark: SparkSession, dir: String)(build: => DataFrame): DataFrame =
-    cache.getOrElse((spark, dir), {
-      cache.keys.filter(k => k._1 eq spark).filter(_._2 != dir)
-        .foreach(k => cache.remove(k).foreach(_.unpersist()))
-      val df = build.cache()
-      cache.putIfAbsent((spark, dir), df) match {
-        case Some(existing) => df.unpersist(); existing
-        case None => df
-      }
-    })
+  private val memos = new graft.SharedBuilds.Owner
+  private val imgCache = memos.frames()
+  private val audCache = memos.frames()
+  private val vidCache = memos.frames()
+  private val sceneCache = memos.frames()
 
   /** Evict the decode tables for `spark` — InvarianceSweep calls this
     * between layouts so the sweep re-decodes under each layout's confs
     * instead of re-reading blocks cached under the first. */
-  private[graft] def clearMemos(spark: SparkSession): Unit =
-    Seq(imgCache, audCache, vidCache, sceneCache).foreach { c =>
-      c.keys.filter(_._1 eq spark)
-        .foreach(k => c.remove(k).foreach(_.unpersist()))
-    }
+  private[graft] def clearMemos(spark: SparkSession): Unit = memos.clear(spark)
 
   /** Bench forces these under attributed `shared:` lines BEFORE timing the
     * registry, so each mm query's median measures marginal cost and the
@@ -107,7 +86,7 @@ object Decoded {
     * replaces (imageDecode / imageColorfulness / imageBlur / phashes /
     * imageResize) — their oracles pin it unchanged. */
   def images(spark: SparkSession, dir: String): DataFrame =
-    memo(imgCache, spark, dir) {
+    imgCache(spark, dir) {
       val ids = Tables.spread(
         Tables.load(spark, dir, "documents").select(col("doc_id")))
       val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(imageSchema)
@@ -249,7 +228,7 @@ object Decoded {
     * rail/gate; the public operators keep their parameters and fall back
     * to a bespoke pass for non-default values. */
   def audio(spark: SparkSession, dir: String): DataFrame =
-    memo(audCache, spark, dir) {
+    audCache(spark, dir) {
       val ids = Tables.loadSerial(spark, dir, "documents").select(col("doc_id"))
       val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(audioSchema)
       ids.mapPartitions { rows =>
@@ -369,7 +348,7 @@ object Decoded {
     * three-container header sniff (binaryMeta) stay standalone — their
     * codec work IS the operator. */
   def videoFrames(spark: SparkSession, dir: String): DataFrame =
-    memo(vidCache, spark, dir) {
+    vidCache(spark, dir) {
       val ids = Tables.spread(
         Tables.load(spark, dir, "documents").select(col("doc_id")))
       val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(videoFrameSchema)
@@ -422,7 +401,7 @@ object Decoded {
     * videoMotion (which histograms its SAD magnitudes): one build+parse+
     * frame-difference pass per corpus instead of one per query. */
   def videoScenes(spark: SparkSession, dir: String): DataFrame =
-    memo(sceneCache, spark, dir) {
+    sceneCache(spark, dir) {
       Video.sceneDetectOf(Tables.spread(
         Tables.load(spark, dir, "documents").select(col("doc_id"))))
     }

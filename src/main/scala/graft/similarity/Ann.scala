@@ -1449,7 +1449,7 @@ object Ann {
     * never see quantization error, only quantization RECALL loss (priced
     * by [[pqRecall]]).
     *
-    * r17 ProfileAB adjudication (r16 verdict item 8) vs
+    * r17 in-JVM interleaved A/B (r16 verdict item 8) vs
     * [[pqRerankFused]], which carries the raw vector through the ADC
     * shortlist so no second corpus scan exists: same-window interleaved,
     * 7 passes, sf0.1 — fused median 0.584 s / min 0.515 vs this form's
@@ -1602,7 +1602,7 @@ object Ann {
       .limit(k)
   }
 
-  /** The r17 ProfileAB variant of [[pqRerank]] (r16 verdict item 8):
+  /** The r17 A/B variant of [[pqRerank]] (r16 verdict item 8):
     * fuse the exact rerank into the ADC scan by carrying the raw vector
     * through the shortlist TakeOrderedAndProject, so no second corpus
     * scan or fetch-join exists. Same output contract as pqRerank. Not

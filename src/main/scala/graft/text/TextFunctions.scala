@@ -1196,53 +1196,20 @@ object TextFunctions {
     * raw counts behind PMI / association mining. The vocabulary is capped
     * at the top-K DF terms FIRST, so the per-document pair fan-out is
     * bounded by K²/2 regardless of document length (the property that
-    * keeps this runnable at corpus scale). */
-  def cooccurrence(spark: SparkSession, dir: String, vocab: Int = 20, topK: Int = 30): DataFrame =
-    cooccurrenceSelfJoin(spark, dir, vocab, topK)
-
-  /** The r15 set-explode rewrite, kept as this round's MEASURED
-    * counter-example (the emb_outlier_share convention): structurally
-    * one subtree and one doc_id shuffle, but the r16 same-window
-    * ProfileAB adjudication (7 interleaved passes, sf0.1) read
-    * set-explode median 1.342 s / min 1.215 vs self-join median
-    * 1.077 s / min 0.995 — the collect_set hash aggregation (array
-    * state per doc) costs more than the self-join's second pass over
-    * the head-term rows at any window we measured, confirming the r15
-    * verdict's 1.40 → 1.80 s regression reading. The trade flips only
-    * where the corpus SCAN dominates (the self-join plans the
-    * scan+filter subtree twice): at true lake scale a curator should
-    * materialize the ≤vocab-per-doc head-term table once and feed
-    * either form from it, at which point the double-planned subtree is
-    * a bounded table and the forms converge. */
-  private[graft] def cooccurrenceSetExplode(spark: SparkSession, dir: String,
-      vocab: Int = 20, topK: Int = 30): DataFrame = {
-    val top = termDocFreq(spark, dir, vocab).select(col("term"))
-    val docTerms = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), explode(array_distinct(split(normText(col("text")), " "))).as("term"))
-      .where(length(col("term")) >= 3)
-      .join(broadcast(top), "term")
-    docTerms
-      .groupBy("doc_id").agg(sort_array(collect_set(col("term"))).as("ts"))
-      .select(explode(flatten(transform(col("ts"), (x, i) =>
-        transform(slice(col("ts"), i + lit(2), size(col("ts"))),
-          y => struct(x.as("term_a"), y.as("term_b")))))).as("p"))
-      .groupBy(col("p.term_a").as("term_a"), col("p.term_b").as("term_b"))
-      .agg(count(lit(1)).as("n_docs"))
-      .orderBy(col("n_docs").desc, col("term_a"), col("term_b"))
-      .limit(topK)
-  }
-
-  /** The REGISTERED form (restored by the r16 ProfileAB adjudication —
-    * numbers on [[cooccurrenceSetExplode]]): the doc_id self-join plans
-    * the filtered term fan-out twice, but each side is only the
-    * head-term rows (≤ vocab per doc, a broadcast-semi'd sliver of the
-    * corpus) and the join runs hash-to-hash, beating the set-explode's
-    * collect_set array state by ~25% in every same-window pass. Same
-    * output by construction (both count distinct head-term pairs per
-    * doc); the per-doc pair fan-out stays ≤ vocab²/2 by the vocabulary
-    * cap either way. */
-  private[graft] def cooccurrenceSelfJoin(spark: SparkSession, dir: String,
-      vocab: Int = 20, topK: Int = 30): DataFrame = {
+    * keeps this runnable at corpus scale).
+    *
+    * A doc_id self-join over the head-term rows: each side is only a
+    * broadcast-semi'd sliver of the corpus (≤ vocab rows per doc) and the
+    * join runs hash-to-hash. An r15 rewrite that exploded each doc's
+    * collect_set of head terms into its pairs (one subtree, one doc_id
+    * shuffle) lost to this form in an r16 same-window A/B (7 interleaved
+    * passes, sf0.1): set-explode median 1.342 s / min 1.215 vs self-join
+    * median 1.077 s / min 0.995 — the collect_set array state per doc
+    * costs more than the self-join's second pass over the head-term rows.
+    * The trade flips only where the corpus SCAN dominates (the self-join
+    * plans the scan+filter subtree twice): at true lake scale, materialize
+    * the head-term table once and feed the join from it. */
+  def cooccurrence(spark: SparkSession, dir: String, vocab: Int = 20, topK: Int = 30): DataFrame = {
     val top = termDocFreq(spark, dir, vocab).select(col("term"))
     val docTerms = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), explode(array_distinct(split(normText(col("text")), " "))).as("term"))
