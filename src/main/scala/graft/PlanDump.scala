@@ -12,8 +12,28 @@ package graft
   * quality — regenerate every registered query each round and delete the
   * superseded directories, so each query has exactly one current dump).
   * Planner-only (no execution), so the full registry dumps in minutes.
+  * Dumps are written [[normalized]], so they diff raw across runs and
+  * commits.
   */
 object PlanDump {
+  /** `name`'s formatted physical plan, [[normalized]]. */
+  def planText(spark: org.apache.spark.sql.SparkSession, sfDir: String, name: String): String =
+    normalized(SparkEntry.queries(name)(spark, sfDir).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode))
+
+  /** Masks the counters a plan prints that move between runs of one
+    * commit: expression ids (`#12`), exchange `plan_id=`s (they shift
+    * with AQE re-planning), RDD ids (`MapPartitionsRDD[446]`), the
+    * `File.scala:<line>` call sites of `localCheckpoint` nodes, and the
+    * JVM-generated class name and identity hash of a `mapPartitions`
+    * lambda. */
+  private def normalized(plan: String): String =
+    plan.replaceAll("#\\d+", "#_")
+      .replaceAll("plan_id=\\d+", "plan_id=_")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[_]")
+      .replaceAll("(\\w+\\.scala):\\d+", "$1:_")
+      .replaceAll("Lambda(\\$\\d+)?/0x\\p{XDigit}+@\\p{XDigit}+", "Lambda_")
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <sfDir> <outDir> <query|ALL> [query...]")
     val sfDir = args(0)
@@ -27,11 +47,8 @@ object PlanDump {
       else args.drop(2).toSeq
     names.foreach { name =>
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(outDir.resolve(s"$name.txt"),
-          plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          planText(spark, sfDir, name).getBytes(java.nio.charset.StandardCharsets.UTF_8))
         println(s"[plandump] wrote $name")
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")

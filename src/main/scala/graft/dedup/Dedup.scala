@@ -610,7 +610,8 @@ object Dedup {
     containSchemeCache(spark, dir)(containmentSchemeOf(normCorpus(spark, dir)))
 
   /** The decision itself on an arbitrary normalized corpus (doc_id, t) —
-    * ScaleSmoke drives this on synthetic closed-vocabulary corpora.
+    * Round12Spec (closed vocabulary) and ScaleSwitchSpec (token-suffixed
+    * replicas) drive this on synthetic corpora.
     *
     * The banding floor is no longer unconditional (r13 verdict item 3: a
     * 100 TB crawl WILL hit closed-vocab shards, and "refuse" can't be the
@@ -644,7 +645,7 @@ object Dedup {
   /** Closed-form 16×1 banding price: the pair count the band self-join
     * would emit, from bucket occupancy alone (the blockingHealth
     * count-of-counts move) — prices a flood without materializing it. */
-  private[graft] def banding16x1PricedPairs(sigs: DataFrame): Long =
+  private def banding16x1PricedPairs(sigs: DataFrame): Long =
     sigs.select(explode(array((0 until 16).map(i =>
         struct(lit(i).as("b"), col(s"sig$i").as("k"))): _*)).as("bk"))
       .groupBy(col("bk.b"), col("bk.k")).agg(count(lit(1)).as("n"))
@@ -725,8 +726,8 @@ object Dedup {
   private def bandCandidateIds16x1(spark: SparkSession, dir: String): DataFrame =
     bandCandidateIds16x1Of(signatures(spark, dir))
 
-  /** [[bandCandidateIds16x1]] over an arbitrary signature table — exposed
-    * so scale smokes can price the banding floor on synthetic corpora. */
+  /** [[bandCandidateIds16x1]] over an arbitrary signature table — the
+    * df-capped floor and Round14Spec's uncapped recall baseline. */
   private[graft] def bandCandidateIds16x1Of(sigs: DataFrame): DataFrame = {
     val b1 = sigs.select(col("doc_id"), explode(array((0 until 16).map(i =>
         struct(lit(i).as("band_id"), col(s"sig$i").as("band_key"))): _*)).as("bk"))
@@ -740,7 +741,7 @@ object Dedup {
   }
 
   /** Signature table over an arbitrary (doc_id, t) corpus — the
-    * scale-smoke twin of [[signatures]] (no memo, no cache). */
+    * unmemoized twin of [[signatures]] that [[containmentSchemeOf]] prices. */
   private[graft] def signaturesOf(corpus: DataFrame): DataFrame =
     sigsOf(corpus.select(col("doc_id"), shingleCol(col("t")).as("shingles")))
 
@@ -1400,10 +1401,8 @@ object Dedup {
 
   /** 128-bit SimHash fingerprints of a normalized corpus (`doc_id`, `t`):
     * per-bit majority vote over the token md5s, block b = hex chars
-    * [4b+1, 4b+4] → columns fp0..fp7 of 16 bits each. Takes the corpus as
-    * a frame so [[graft.ScaleSmoke]] can drive the REAL implementation at
-    * multiplied scale. */
-  def simhashFingerprintsOf(norm: DataFrame): DataFrame = {
+    * [4b+1, 4b+4] → columns fp0..fp7 of 16 bits each. */
+  private def simhashFingerprintsOf(norm: DataFrame): DataFrame = {
     val toks = norm
       .select(col("doc_id"), explode(split(col("t"), " ")).as("tok"))
       .select(col("doc_id") +: (0 until simhashBlocks).map { b =>
@@ -1426,9 +1425,9 @@ object Dedup {
 
   /** Banded candidate pairs over the fingerprints, BEFORE the Hamming
     * verify: explode each doc into its 28 (table, fp_i·2¹⁶+fp_j) keys,
-    * self-join on the key, dedup (id_a, id_b). Exposed separately so the
-    * scale smoke can measure raw candidate volume. */
-  def simhashCandidates(fps: DataFrame): DataFrame = {
+    * self-join on the key, dedup (id_a, id_b). Separate from the verify
+    * so SimhashPropertySpec and ScaleSwitchSpec can check raw candidates. */
+  private[graft] def simhashCandidates(fps: DataFrame): DataFrame = {
     val fpNames = (0 until simhashBlocks).map(b => s"fp$b")
     val banded = fps
       .select(col("doc_id") +: fpNames.map(col) :+
@@ -2497,9 +2496,9 @@ object Dedup {
        |FROM deg GROUP BY degree ORDER BY degree""".stripMargin
 
   /** LSH band-bucket occupancy histogram — the blocking-health metric
-    * the ScaleSmoke probe bounds, exposed as a first-class query: per
-    * band, how many buckets hold k signatures and how many candidate
-    * pairs (k·(k−1)/2 each) those buckets generate. THE number to watch
+    * as a first-class query: per band, how many buckets hold k
+    * signatures and how many candidate pairs (k·(k−1)/2 each) those
+    * buckets generate. THE number to watch
     * at 100 TB: verify cost is exactly Σ occ·(occ−1)/2, and a template
     * flood shows up here (one bucket's occupancy exploding) before the
     * verify stage melts — the curator reads this, then caps or pre-drops

@@ -413,12 +413,12 @@ object Decoded {
     * carry the bucket spec). Built once per corpus ingest; every
     * downstream per-document join or aggregation then reads its bucket
     * co-partitioned — zero exchanges on the decoded side, which
-    * DecodedTablesSpec pins on the executed plan and the ScaleSmoke
-    * persisted-table rung demonstrates at the growth ladder.
+    * DecodedTablesSpec pins on the executed plan.
     *
     * Bucket count: a real deployment sizes this at corpus ingest
-    * (rows/bucket ≈ tens of millions); the parameter is explicit so the
-    * smoke can exercise non-default counts. Returns the table names. */
+    * (rows/bucket ≈ tens of millions); the parameter is explicit so
+    * DecodedTablesSpec can exercise non-default counts. Returns the
+    * table names. */
   def writeDecodedTables(spark: SparkSession, dir: String, buckets: Int = 32,
       tablePrefix: String = "graft_decoded"): Seq[String] = {
     val tables: Seq[(String, DataFrame, Seq[String])] = Seq(

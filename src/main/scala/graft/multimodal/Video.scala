@@ -318,17 +318,6 @@ object Video {
 
   // ---- operators -------------------------------------------------------
 
-  private val videoSchema = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("n_frames", IntegerType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("n_pixels", LongType, nullable = false),
-    StructField("sum_red", LongType, nullable = false),
-    StructField("sum_green", LongType, nullable = false),
-    StructField("sum_blue", LongType, nullable = false)))
-
   /** Whole-clip decode over the pixel-exact DIB leg: build the container,
     * parse it back, decode every frame, aggregate. Dimensions and frame
     * count are read from the PARSED headers, sums from the DECODED
@@ -337,9 +326,7 @@ object Video {
     * formula), so any writer/parser disagreement fails the hash.
     *
     * Reads the shared [[Decoded.videoFrames]] pass (one container
-    * build+parse per corpus for the whole lossless video family);
-    * [[videoDecodeOf]] below remains the standalone codec core for
-    * arbitrary clip-id sets (scale smokes). */
+    * build+parse per corpus for the whole lossless video family). */
   def videoDecode(spark: SparkSession, dir: String): DataFrame =
     Decoded.videoFrames(spark, dir)
       .groupBy("doc_id", "width", "height", "n_frames", "n_bytes")
@@ -353,32 +340,6 @@ object Video {
       .withColumn("mean_red",
         col("sum_red").cast("double") / col("n_pixels").cast("double"))
       .orderBy("doc_id")
-
-  /** [[videoDecode]]'s codec core over an arbitrary clip-id set — shared
-    * with the ×N scale smoke so codec cost has a growth curve. */
-  private[graft] def videoDecodeOf(ids: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(videoSchema)
-    val decoded = ids.mapPartitions { rows =>
-      rows.map { row =>
-        val id = row.getLong(0)
-        val container = buildAviDib(id)
-        val p = parseAvi(container)
-        require(p.handler == "DIB " && p.biCompression == 0L,
-          s"clip $id: unexpected codec ${p.handler}/${p.biCompression}")
-        var sr = 0L; var sg = 0L; var sb = 0L
-        p.frames.foreach { case (_, data) =>
-          val (r, g, b) = dibSums(p.width, p.height, data)
-          sr += r; sg += g; sb += b
-        }
-        Row(id, p.width, p.height, p.nFrames, container.length.toLong,
-          p.width.toLong * p.height * p.nFrames, sr, sg, sb)
-      }
-    }(enc)
-    decoded
-      .withColumn("mean_red",
-        col("sum_red").cast("double") / col("n_pixels").cast("double"))
-      .orderBy("doc_id")
-  }
 
   /** Shared oracle CTE: closed-form twin of the clip function — per-doc
     * dims and per-frame channel sums, no codec involved. */
@@ -648,9 +609,9 @@ object Video {
   def sceneDetect(spark: SparkSession, dir: String): DataFrame =
     Decoded.videoScenes(spark, dir).orderBy("doc_id")
 
-  /** [[sceneDetect]]'s codec core over an arbitrary clip-id set — shared
-    * with the ×N scale smoke. */
-  private[graft] def sceneDetectOf(ids: DataFrame): DataFrame = {
+  /** [[sceneDetect]]'s codec core over an arbitrary clip-id set — the
+    * per-clip pass [[Decoded.videoScenes]] memoizes. */
+  private[multimodal] def sceneDetectOf(ids: DataFrame): DataFrame = {
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(sceneSchema)
     val detected = ids.mapPartitions { rows =>
       rows.map { row =>

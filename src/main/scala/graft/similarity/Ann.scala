@@ -1249,7 +1249,7 @@ object Ann {
   def pqTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     pqTopKOf(spark, Tables.load(spark, dir, "embeddings"), k)
 
-  private[graft] def pqTopKOf(spark: SparkSession, emb: DataFrame, k: Int): DataFrame =
+  private def pqTopKOf(spark: SparkSession, emb: DataFrame, k: Int): DataFrame =
     pqTopKOver(spark, emb, emb, k).drop("label")
 
   /** Embedding centroid drift between two interleaved snapshots (even
@@ -1498,7 +1498,7 @@ object Ann {
   def ivfpqTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     ivfpqTopKOf(spark, Tables.load(spark, dir, "embeddings"), k)
 
-  private[graft] def ivfpqTopKOf(spark: SparkSession, emb: DataFrame, k: Int): DataFrame = {
+  private def ivfpqTopKOf(spark: SparkSession, emb: DataFrame, k: Int): DataFrame = {
     val q = emb.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
     val centroids = emb
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
@@ -2720,7 +2720,7 @@ object Ann {
       Tables.spreadBy(Tables.load(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding")), col("vec_id")))
 
-  def nlistElbowOf(spark: SparkSession, embSrc: DataFrame): DataFrame = {
+  private def nlistElbowOf(spark: SparkSession, embSrc: DataFrame): DataFrame = {
     val ks = Seq(4, 8, 16, 32)
     val emb = embSrc.select(col("vec_id"), col("embedding"))
     val seeds = emb.where(col("vec_id") < ks.max)
@@ -2813,7 +2813,7 @@ object Ann {
     // exchange is pure cost for this shape.
     pqMSweepOf(spark, Tables.load(spark, dir, "embeddings"))
 
-  def pqMSweepOf(spark: SparkSession, embSrc: DataFrame): DataFrame = {
+  private def pqMSweepOf(spark: SparkSession, embSrc: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
     val nCodes = 16
     val ms = Seq(2, 4, 8, 16)
@@ -2947,9 +2947,9 @@ object Ann {
     * [[labelPurity]] (never all-pairs), in-degree one count-by-key,
     * the zero-degree completion a left join on vec_id, the fold a
     * single-row aggregate. The all-nodes candidate count is n²/2^bits —
-    * at corpus scale widen the sign code (16+ hyperplanes, the
-    * ScaleSmoke line) so per-bucket populations stay bounded, or run
-    * the same in-degree algebra over the [[nnDescentRound]] graph. */
+    * at corpus scale widen the sign code (16+ hyperplanes) so per-bucket
+    * populations stay bounded, or run the same in-degree algebra over
+    * the [[nnDescentRound]] graph. */
   def hubness(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
       .withColumn("bucket", signCode(col("embedding")))

@@ -309,7 +309,7 @@ object TextFunctions {
           .cast("long"))
   }
 
-  private[graft] def qualityBinsOf(scored: DataFrame): DataFrame =
+  private def qualityBinsOf(scored: DataFrame): DataFrame =
     qualityDecilesOf(scored)
       .groupBy("decile")
       .agg(
@@ -327,7 +327,7 @@ object TextFunctions {
   def termDocFreq(spark: SparkSession, dir: String, topK: Int = 20): DataFrame =
     termDocFreqOf(Tables.load(spark, dir, "documents"), topK)
 
-  private[graft] def termDocFreqOf(docs: DataFrame, topK: Int): DataFrame = {
+  private def termDocFreqOf(docs: DataFrame, topK: Int): DataFrame = {
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     docs
       .select(explode(array_distinct(split(normText(col("text")), " "))).as("term"))

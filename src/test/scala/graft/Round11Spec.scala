@@ -205,6 +205,14 @@ class Round11Spec extends AnyFunSuite {
     val expSalt = math.min(32L, math.max(1L, (counts.last + 9999L) / 10000L))
     assert(r.getAs[Long]("recommended_salt") == expSalt)
     assert(r.getAs[Boolean]("needs_salting") == (expSalt > 1L))
+    // the boundary: a hottest key of exactly one task's worth stays
+    // unsalted, one event more splits it in two
+    for ((hottest, salt) <- Seq((100L, 1L), (101L, 2L))) {
+      val b = graft.cdc.Monitoring.saltAdvisorFromPerKey(
+        spark.createDataFrame(Seq((1L, hottest), (2L, 3L))).toDF("pk", "cnt"),
+        targetPerTask = 100L).collect().head
+      assert(b.getAs[Long]("recommended_salt") == salt, s"hottest key $hottest")
+    }
   }
 
   test("audio fp dedup: re-uploads found at hamming 0, threshold respected, fp brute-checked") {

@@ -218,6 +218,17 @@ class Round12Spec extends AnyFunSuite {
       "hot-key changelog must take the salted topology")
     assert(hotAdvised.exceptAll(hotPlain).isEmpty && hotPlain.exceptAll(hotAdvised).isEmpty,
       "the advised topology must not change the materialized state")
+    // Zipf-skewed changelog: the hot key holds ~10% of 20k events (ts
+    // ties, deletes), past the 1000/task target → salted, same rows
+    val zipf = TestSpark.zipfChangelog(20000L, 1000L, seed = 7L)
+    val zipfAdvised = Materialize.latestSnapshotAdvised(zipf, targetPerTask = 1000L)
+    val zipfPlain = Materialize.latestSnapshot(zipf)
+    assert(shape2(zipfAdvised) != shape2(zipfPlain),
+      "Zipf-skewed changelog must take the salted topology")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(rows(zipfAdvised) == rows(zipfPlain),
+      "the advised topology must not change the materialized state under skew")
   }
 
   test("paragraph dedup: injected exact copies are fully duplicated") {

@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-17 pins: the pq_rerank ProfileAB variant must be output-identical
-  * to the registered form (both end in the same exact-L2 top-k — only the
-  * plan shape differs), so the A/B adjudicates COST, never correctness. */
+/** Round-17 pins: `pqRerankFused`, Ann's unregistered counter-example,
+  * must be output-identical to the registered form (both end in the same
+  * exact-L2 top-k — only the plan shape differs), so the A/B adjudicates
+  * COST, never correctness. */
 class Round17Spec extends AnyFunSuite {
   import TestSpark.{spark, dir}
 
