@@ -3,6 +3,7 @@ package graft
 import graft.cdc.Materialize
 import graft.sinks.TableSink
 import graft.sources.WireSource
+import graft.streaming.BatchLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -39,6 +40,16 @@ object Pipeline {
       col("offset").as("seq"),
       coalesce(col("after.value"), col("before.value")).as("value"))
 
+  /** Per-message parse guard (the reference consumer's try/except): an
+    * unroutable (null-op) envelope goes to the DLQ, never into the apply —
+    * one poisoned message must not corrupt state or kill the query. The
+    * DLQ is a [[graft.streaming.BatchLog]], so a retried micro-batch
+    * overwrites only its own partition. */
+  private def routeToDlq(cfg: Config, batch: DataFrame, batchId: Long): Unit =
+    cfg.dlqPath.foreach { p =>
+      BatchLog.write(batch.where(col("op").isNull).select("topic", "offset"), p, batchId)
+    }
+
   /** Create + start: optional full load, then continuous apply. Each
     * micro-batch merges into the state table with upsert semantics —
     * idempotent, so at-least-once delivery is exactly-once in the table. */
@@ -65,18 +76,7 @@ object Pipeline {
       .writeStream
       .option("checkpointLocation", cfg.checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-message parse guard (the reference consumer's try/except):
-        // an unroutable envelope goes to the DLQ, never into the apply —
-        // one poisoned message must not corrupt state or kill the query
-        val bad = batch.where(col("op").isNull)
-        cfg.dlqPath.foreach { p =>
-          // idempotent under micro-batch replay: each batch owns its
-          // batch_id partition, and a retry overwrites only that partition
-          bad.select("topic", "offset").withColumn("batch_id", lit(batchId))
-            .write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(p)
-        }
+        routeToDlq(cfg, batch, batchId)
         TableSink.upsert(spark, cfg.statePath,
           toChangelog(batch.where(col("op").isNotNull)))
         ()
@@ -109,13 +109,7 @@ object Pipeline {
           // same poisoned-message guard as the single-table path: a null-op
           // envelope must land in the DLQ, not vanish inside the merge's
           // op filter with no trace
-          val bad = batch.where(col("op").isNull)
-          cfg.dlqPath.foreach { p =>
-            bad.select("topic", "offset").withColumn("batch_id", lit(batchId))
-              .write.partitionBy("batch_id")
-              .option("partitionOverwriteMode", "dynamic")
-              .mode("overwrite").parquet(p)
-          }
+          routeToDlq(cfg, batch, batchId)
           val good = batch.where(col("op").isNotNull)
           // static list when provisioned (the reference's table.include.list);
           // if neither config nor start-time discovery found tables (wire

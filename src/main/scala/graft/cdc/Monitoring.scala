@@ -1376,13 +1376,22 @@ object Monitoring {
     * only (the window-audit exception), output |buckets| rows. */
   def lsnLatencyTrend(spark: SparkSession, dir: String,
                       bucketMs: Long = 600000L, horizonBuckets: Int = 6): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.orderBy("bucket_id")
-    val cum = w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val agg = graft.Tables.load(spark, dir, "events")
       .select(expr(s"unix_millis(ts) div $bucketMs").as("bucket_id"),
         col("event_id"))
       .groupBy("bucket_id")
       .agg(max(col("event_id")).as("bucket_max"), count(lit(1)).as("n_arrived"))
+    lsnTrendFromBuckets(agg, bucketMs, horizonBuckets).orderBy("bucket")
+  }
+
+  /** The trend's spine and window tail over an arbitrary (bucket_id,
+    * bucket_max, n_arrived) per-bucket aggregate — shared with the
+    * streaming twin ([[graft.streaming.StreamLsnTrend]]) so the two can
+    * never diverge on the trend math. */
+  private[graft] def lsnTrendFromBuckets(
+      agg: DataFrame, bucketMs: Long, horizonBuckets: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.orderBy("bucket_id")
+    val cum = w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     // Dense bucket spine from the aggregate's own range: |buckets| rows,
     // derived and joined entirely on the pre-aggregated trend.
     val spine = agg.agg(min(col("bucket_id")).as("lo"), max(col("bucket_id")).as("hi"))
@@ -1400,7 +1409,6 @@ object Monitoring {
         coalesce(col("processed_lsn"), lit(0L)).as("processed_lsn"),
         (col("source_lsn") - coalesce(col("processed_lsn"), lit(0L))).as("lsn_gap"),
         col("n_arrived"), col("n_pending"))
-      .orderBy("bucket")
   }
 
   def lsnLatencyTrendSql(bucketMs: Long = 600000L, horizonBuckets: Int = 6): String =

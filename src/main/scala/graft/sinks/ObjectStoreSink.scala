@@ -43,10 +43,7 @@ object ObjectStoreSink {
   def startStream(spark: SparkSession, wirePath: String, basePath: String,
                   checkpointPath: String, partitions: Int = 4,
                   flushSize: Int = 10): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(graft.sources.WireSource.wireSchema)
-      .option("maxFilesPerTrigger", "4")
-      .json(wirePath)
+    graft.sources.WireSource.readRawStream(spark, wirePath)
       .withColumn("partition", pmod(col("offset"), lit(partitions.toLong)).cast("int"))
       .writeStream
       .format("json")

@@ -31,9 +31,13 @@ object WireSource {
   def readBatch(spark: SparkSession, path: String): DataFrame =
     Cdc.parseEnvelope(spark.read.schema(wireSchema).json(path))
 
-  /** Stream-consume wire files → parsed envelopes (file-source streaming;
+  /** Stream-consume raw wire messages (topic, offset, value) — the one
+    * place that sets wire admission per trigger (file-source streaming;
     * swap `.json(path)` for `.format("kafka")` against a live bus). */
+  private[graft] def readRawStream(spark: SparkSession, path: String): DataFrame =
+    spark.readStream.schema(wireSchema).option("maxFilesPerTrigger", "4").json(path)
+
+  /** Stream-consume wire files → parsed envelopes. */
   def readStream(spark: SparkSession, path: String): DataFrame =
-    Cdc.parseEnvelope(
-      spark.readStream.schema(wireSchema).option("maxFilesPerTrigger", "4").json(path))
+    Cdc.parseEnvelope(readRawStream(spark, path))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -18,11 +18,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *
   * Scale shape: each micro-batch collapses to per-(topic, partition)
   * message counts before anything touches state — state rows per batch
-  * are bounded by |topics × partitions|, never the messages. Writes are
-  * batch_id-partitioned dynamic overwrite, and a replayed batch reads
-  * only state batches < its own id then counts itself from its
-  * in-memory frame — the [[LagSla]]/[[MixMonitor]] idempotency pattern,
-  * so a replay neither double-counts its own arrivals nor loses them.
+  * are bounded by |topics × partitions|, never the messages. Both logs
+  * are [[BatchLog]]s: a replayed batch reads only state batches < its
+  * own id then counts itself from its in-memory frame, so a replay
+  * neither double-counts its own arrivals nor loses them.
   */
 object ConsumerLag {
 
@@ -40,15 +39,6 @@ object ConsumerLag {
     StructField("table_name", StringType),
     StructField("partition", LongType),
     StructField("n_messages", LongType)))
-
-  private def readStateOr(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      spark.read.schema(schema.add("batch_id", LongType)).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema.add("batch_id", LongType))
-  }
 
   /** Per-(topic, partition) message counts for one parsed-envelope batch —
     * the bounded state grain. Partition is keyed the same way the batch
@@ -79,14 +69,9 @@ object ConsumerLag {
     * tests drive it directly). */
   private[graft] def monitorBatch(
       spark: SparkSession, cfg: Config, batch: DataFrame, batchId: Long): Unit = {
-    val deltas = partitionDeltas(batch, cfg.partitions).withColumn("batch_id", lit(batchId))
-    def writePartitioned(df: DataFrame, path: String): Unit =
-      df.write.partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(path)
-    writePartitioned(deltas, countsPath(cfg))
-    val prior = readStateOr(spark, countsPath(cfg), countSchema)
-      .where(col("batch_id") < batchId)
+    val deltas = partitionDeltas(batch, cfg.partitions)
+    BatchLog.write(deltas, countsPath(cfg), batchId)
+    val prior = BatchLog.before(spark, countsPath(cfg), countSchema, batchId)
       .groupBy("topic", "table_name", "partition")
       .agg(sum(col("n_messages")).as("committed_offset"))
     val report = deltas
@@ -100,14 +85,11 @@ object ConsumerLag {
         (coalesce(col("committed_offset"), lit(0L)) + coalesce(col("arrived"), lit(0L)))
           .as("end_offset"))
       .withColumn("lag", col("end_offset") - col("committed_offset"))
-      .withColumn("batch_id", lit(batchId))
-    writePartitioned(report, lagPath(cfg))
+    BatchLog.write(report, lagPath(cfg), batchId)
   }
 
-  /** Read back the per-batch lag report. The batch_id partition column
-    * can read back as INT — cast explicitly. */
+  /** Read back the per-batch lag report. */
   def lag(spark: SparkSession, cfg: Config): DataFrame =
-    spark.read.parquet(lagPath(cfg))
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    BatchLog.history(spark, lagPath(cfg))
       .orderBy("batch_id", "topic", "partition")
 }

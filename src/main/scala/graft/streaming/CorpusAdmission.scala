@@ -25,10 +25,9 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: per batch, cost is the batch's band-bucket overlap with
   * the index — never |index|² and never a rescan of raw index text (only
-  * the shingle/band state tables are read). All three state writes are
-  * batch_id-partitioned with dynamic overwrite, so a replayed micro-batch
-  * overwrites exactly its own partition — idempotent under at-least-once
-  * delivery, like the Pipeline DLQ.
+  * the shingle/band state tables are read). All three state logs are
+  * [[BatchLog]]s, so a replayed micro-batch overwrites exactly its own
+  * partition — idempotent under at-least-once delivery.
   */
 object CorpusAdmission {
 
@@ -45,18 +44,6 @@ object CorpusAdmission {
   private def shinglesPath(cfg: Config) = s"${cfg.statePath}/shingles"
   private def bandsPath(cfg: Config) = s"${cfg.statePath}/bands"
   private def decisionsPath(cfg: Config) = s"${cfg.statePath}/decisions"
-
-  private def readStateOr(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    // resolve the filesystem FROM the path — FileSystem.get(conf) returns
-    // the default FS and throws "Wrong FS" for s3a://… state on an
-    // hdfs-default cluster (exactly the lake deployment this targets)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      spark.read.schema(schema.add("batch_id", LongType)).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema.add("batch_id", LongType))
-  }
 
   private val shingleSchema = StructType(Seq(
     StructField("doc_id", LongType),
@@ -94,10 +81,10 @@ object CorpusAdmission {
       // wrote: a REPLAYED batch must not match against its own previous
       // write (it would reject everything against itself), and the
       // batch_id partitioning makes the exclusion a pruned scan
-      val idxSh = readStateOr(spark, shinglesPath(cfg), shingleSchema)
-        .where(col("batch_id") < batchId).select("doc_id", "shingles")
-      val idxBands = readStateOr(spark, bandsPath(cfg), bandSchema)
-        .where(col("batch_id") < batchId).select("doc_id", "band_id", "band_key")
+      val idxSh = BatchLog.before(spark, shinglesPath(cfg), shingleSchema, batchId)
+        .select("doc_id", "shingles")
+      val idxBands = BatchLog.before(spark, bandsPath(cfg), bandSchema, batchId)
+        .select("doc_id", "band_id", "band_key")
 
       // candidates: batch × index, plus batch × batch with the lower id
       // as the member side — bare id pairs only, no shingle arrays yet
@@ -130,19 +117,12 @@ object CorpusAdmission {
       val decisions = batch.select(col("doc_id"))
         .join(best, Seq("doc_id"), "left")
         .withColumn("admitted", when(col("jaccard") >= cfg.threshold, 0L).otherwise(1L))
-        .withColumn("batch_id", lit(batchId))
         .persist()
       try {
-        def writePartitioned(df: DataFrame, path: String): Unit =
-          df.write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(path)
-        writePartitioned(decisions, decisionsPath(cfg))
+        BatchLog.write(decisions, decisionsPath(cfg), batchId)
         val admittedIds = decisions.where(col("admitted") === 1L).select("doc_id")
-        writePartitioned(sh.join(admittedIds, "doc_id").withColumn("batch_id", lit(batchId)),
-          shinglesPath(cfg))
-        writePartitioned(bands.join(admittedIds, "doc_id").withColumn("batch_id", lit(batchId)),
-          bandsPath(cfg))
+        BatchLog.write(sh.join(admittedIds, "doc_id"), shinglesPath(cfg), batchId)
+        BatchLog.write(bands.join(admittedIds, "doc_id"), bandsPath(cfg), batchId)
       } finally { decisions.unpersist(); () }
     } finally { bands.unpersist(); sh.unpersist(); () }
   }
@@ -150,5 +130,5 @@ object CorpusAdmission {
   /** Read back the decision log (doc_id, match_id, jaccard, admitted,
     * batch_id) for monitoring/tests. */
   def decisions(spark: SparkSession, cfg: Config): DataFrame =
-    spark.read.parquet(decisionsPath(cfg))
+    BatchLog.history(spark, decisionsPath(cfg))
 }

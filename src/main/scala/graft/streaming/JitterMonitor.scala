@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -22,11 +22,10 @@ import org.apache.spark.sql.types._
   * emitted mean/σ/CV match the batch op exactly on an in-order replay —
   * the spec pins that equality.
   *
-  * Scale shape: state rows per batch are bounded by |topics|; writes are
-  * batch_id-partitioned dynamic overwrite and the report folds only
-  * batches ≤ its own id — the [[ConsumerLag]]/[[LagSla]] idempotency
-  * pattern, so an at-least-once replay overwrites its own partition and
-  * never double-counts.
+  * Scale shape: state rows per batch are bounded by |topics|; both logs
+  * are [[BatchLog]]s and the report folds only batches ≤ its own id, so
+  * an at-least-once replay overwrites its own partition and never
+  * double-counts.
   */
 object JitterMonitor {
 
@@ -50,15 +49,6 @@ object JitterMonitor {
     StructField("sg2", d38),
     StructField("max_gap_ms", LongType),
     StructField("n_simultaneous", LongType)))
-
-  private def readStateOr(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      spark.read.schema(schema.add("batch_id", LongType)).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema.add("batch_id", LongType))
-  }
 
   /** One parsed-envelope batch reduced to the per-topic gap grain: the
     * batch's own intra-batch gap moments plus its (first, last) event-ms
@@ -98,13 +88,8 @@ object JitterMonitor {
   private[graft] def monitorBatch(
       spark: SparkSession, cfg: Config, batch: DataFrame, batchId: Long): Unit = {
     val deltas = batchDeltas(batch).withColumn("batch_id", lit(batchId))
-    def writePartitioned(df: DataFrame, path: String): Unit =
-      df.write.partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(path)
-    writePartitioned(deltas, deltasPath(cfg))
-    val all = readStateOr(spark, deltasPath(cfg), deltaSchema)
-      .where(col("batch_id") < batchId)
+    BatchLog.write(deltas, deltasPath(cfg), batchId)
+    val all = BatchLog.before(spark, deltasPath(cfg), deltaSchema, batchId)
       .unionByName(deltas)
     val bw = org.apache.spark.sql.expressions.Window
       .partitionBy("topic").orderBy("batch_id")
@@ -133,13 +118,11 @@ object JitterMonitor {
         sqrt(varG).as("std_gap_ms"),
         when(mean > 0.0, sqrt(varG) / mean).as("cv"),
         col("max_gap_ms"), col("n_simultaneous"))
-      .withColumn("batch_id", lit(batchId))
-    writePartitioned(report, reportPath(cfg))
+    BatchLog.write(report, reportPath(cfg), batchId)
   }
 
   /** Read back the per-batch cumulative jitter report. */
   def jitter(spark: SparkSession, cfg: Config): DataFrame =
-    spark.read.parquet(reportPath(cfg))
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    BatchLog.history(spark, reportPath(cfg))
       .orderBy("batch_id", "topic")
 }

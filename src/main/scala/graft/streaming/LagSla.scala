@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
@@ -19,9 +19,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampT
   * burst/anomaly monitors) plus one exact max-ts row before anything
   * touches state; state is those deltas partitioned by batch_id, so the
   * cumulative ladder is a conditional aggregation over |minutes| tiny
-  * rows, never the events. Writes are batch_id-partitioned dynamic
-  * overwrite, and a replayed batch reads only state batches < its own id
-  * — the [[CorpusAdmission]]/[[MixMonitor]] idempotency pattern.
+  * rows, never the events. Both logs are [[BatchLog]]s, and a replayed
+  * batch reads only state batches < its own id.
   *
   * Quantization contract: events are credited at their minute's START, so
   * a bucket's imputed lag (hwm − bucket_start) is an UPPER bound on every
@@ -53,15 +52,6 @@ object LagSla {
     StructField("n_events", LongType),
     StructField("max_ts", TimestampType)))
 
-  private def readStateOr(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      spark.read.schema(schema.add("batch_id", LongType)).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema.add("batch_id", LongType))
-  }
-
   /** Per-minute event-count deltas for one changelog-shaped batch (`ts`
     * timestamp column) — the bounded state grain. */
   private[graft] def minuteDeltas(batch: DataFrame): DataFrame =
@@ -86,17 +76,13 @@ object LagSla {
     * rows. Exposed for direct batch use (replay tests drive it directly). */
   private[graft] def monitorBatch(
       spark: SparkSession, cfg: Config, batch: DataFrame, batchId: Long): Unit = {
-    val deltas = minuteDeltas(batch).withColumn("batch_id", lit(batchId))
-    def writePartitioned(df: DataFrame, path: String): Unit =
-      df.write.partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(path)
-    writePartitioned(deltas, countsPath(cfg))
+    val deltas = minuteDeltas(batch)
+    BatchLog.write(deltas, countsPath(cfg), batchId)
     // cumulative = prior batches' deltas + this batch's in-memory frame, so
     // a replay that overwrote its own partition still counts itself once
-    val prior = readStateOr(spark, countsPath(cfg), countSchema)
-      .where(col("batch_id") < batchId).select("minute", "n_events", "max_ts")
-    val cum = prior.unionAll(deltas.select("minute", "n_events", "max_ts"))
+    val prior = BatchLog.before(spark, countsPath(cfg), countSchema, batchId)
+      .select("minute", "n_events", "max_ts")
+    val cum = prior.unionAll(deltas)
     val hwm = cum.agg(max(col("max_ts")).as("hwm"))
     // bucket lag = hwm − bucket start (upper bound on member lags); the
     // whole ladder is ONE conditional aggregation over |minutes| rows
@@ -118,15 +104,12 @@ object LagSla {
           .as("compliance"),
         col("s.objective").as("objective"))
       .withColumn("breach", col("compliance") < col("objective"))
-      .withColumn("batch_id", lit(batchId))
-    writePartitioned(ladder, slaPath(cfg))
+    BatchLog.write(ladder, slaPath(cfg), batchId)
   }
 
-  /** Read back the per-batch SLA ladder (4 rows per micro-batch). The
-    * batch_id partition column can read back as INT — cast explicitly. */
+  /** Read back the per-batch SLA ladder (4 rows per micro-batch). */
   def sla(spark: SparkSession, cfg: Config): DataFrame =
-    spark.read.parquet(slaPath(cfg))
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    BatchLog.history(spark, slaPath(cfg))
       .orderBy("batch_id", "slo")
 
   /** Error-budget burn view over the persisted ladder — the streaming

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -21,9 +21,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * runs on the ≤|sources| cumulative rows collected to the driver —
   * the same rows the batch operator's final one-row aggregation holds —
   * with the module's 2⁴⁰ gap quantization, so a replayed batch
-  * recomputes bit-identical drift. Both writes are batch_id-partitioned
-  * dynamic overwrite: at-least-once delivery overwrites exactly its own
-  * partition (the [[CorpusAdmission]] idempotency pattern), and a
+  * recomputes bit-identical drift. Both logs are [[BatchLog]]s:
+  * at-least-once delivery overwrites exactly its own partition, and a
   * replayed batch reads only state batches < its own id, so it never
   * double-counts its previous write.
   */
@@ -49,15 +48,6 @@ object MixMonitor {
   private val countSchema = StructType(Seq(
     StructField("source", StringType),
     StructField("n_tokens", LongType)))
-
-  private def readStateOr(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      spark.read.schema(schema.add("batch_id", LongType)).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema.add("batch_id", LongType))
-  }
 
   /** Per-source whitespace-token deltas for one batch of documents —
     * the same token definition the batch budget/mix operators use, with
@@ -117,34 +107,26 @@ object MixMonitor {
     * the drift row. Exposed for direct batch use. */
   private[graft] def monitorBatch(
       spark: SparkSession, cfg: Config, batch: DataFrame, batchId: Long): Unit = {
-    val deltas = tokenDeltas(batch).withColumn("batch_id", lit(batchId))
-    def writePartitioned(df: DataFrame, path: String): Unit =
-      df.write.partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(path)
-    writePartitioned(deltas, countsPath(cfg))
+    val deltas = tokenDeltas(batch)
+    BatchLog.write(deltas, countsPath(cfg), batchId)
     // cumulative = prior batches' deltas + this batch's (freshly written —
     // but summed from the in-memory frame, so a replay that overwrote its
     // own partition still counts itself exactly once)
-    val prior = readStateOr(spark, countsPath(cfg), countSchema)
-      .where(col("batch_id") < batchId).select("source", "n_tokens")
-    val cum = prior.unionAll(deltas.select("source", "n_tokens"))
+    val prior = BatchLog.before(spark, countsPath(cfg), countSchema, batchId)
+      .select("source", "n_tokens")
+    val cum = prior.unionAll(deltas)
       .groupBy("source").agg(sum(col("n_tokens")).as("n_tokens"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     val (nSources, total, tv, maxGap, worst) = driftOf(cum, cfg.targets)
-    val row = Seq((nSources, total, tv, maxGap, worst, tv > cfg.alertTv, batchId))
+    val row = Seq((nSources, total, tv, maxGap, worst, tv > cfg.alertTv))
     import spark.implicits._
-    writePartitioned(
+    BatchLog.write(
       row.toDF("n_sources", "corpus_tokens", "tv_distance",
-        "max_gap", "max_gap_source", "alert", "batch_id"),
-      driftPath(cfg))
+        "max_gap", "max_gap_source", "alert"),
+      driftPath(cfg), batchId)
   }
 
-  /** Read back the per-batch drift log for dashboards/tests. The
-    * batch_id partition column is cast explicitly: directory-name type
-    * inference may narrow small ids to int, and a dashboard must not
-    * depend on which ids happen to exist. */
+  /** Read back the per-batch drift log for dashboards/tests. */
   def drift(spark: SparkSession, cfg: Config): DataFrame =
-    spark.read.parquet(driftPath(cfg))
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    BatchLog.history(spark, driftPath(cfg))
 }

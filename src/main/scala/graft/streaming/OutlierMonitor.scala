@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
@@ -18,10 +18,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   * Scale shape: the reference statistics are |labels|·d — broadcast;
   * scoring is a per-row index-ordered fold (bit-stable, the module's
   * convention); each micro-batch reduces to |labels| counter rows
-  * before anything is written. State is batch_id-partitioned dynamic
-  * overwrite (the [[CorpusAdmission]]/[[MixMonitor]] idempotency
-  * pattern): an at-least-once replay overwrites exactly its own
-  * partition, so the monitor log never double-counts.
+  * before anything is written. The log is a [[BatchLog]]: an
+  * at-least-once replay overwrites exactly its own partition, so the
+  * monitor log never double-counts.
   */
 object OutlierMonitor {
 
@@ -79,11 +78,7 @@ object OutlierMonitor {
   /** One micro-batch: score, stamp, write idempotently. */
   private[graft] def monitorBatch(
       spark: SparkSession, cfg: Config, batch: DataFrame, batchId: Long): Unit =
-    scoreBatch(spark, cfg, batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(logPath(cfg))
+    BatchLog.write(scoreBatch(spark, cfg, batch), logPath(cfg), batchId)
 
   /** Start the monitor over a JSON-lines vector feed (swap the file
     * source for `format("kafka")` exactly like
@@ -98,11 +93,9 @@ object OutlierMonitor {
       }
       .start()
 
-  /** Read back the per-(batch, label) outlier log. batch_id cast
-    * explicitly: directory-name inference may narrow small ids. */
+  /** Read back the per-(batch, label) outlier log. */
   def outliers(spark: SparkSession, cfg: Config): DataFrame =
-    spark.read.parquet(logPath(cfg))
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    BatchLog.history(spark, logPath(cfg))
 
   /** Derive the frozen per-label stats from a reference vector table —
     * the batch-side handshake (what `emb_outlier_share` computes,

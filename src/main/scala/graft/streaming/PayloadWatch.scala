@@ -25,8 +25,8 @@ import graft.sources.WireSource
   * Scale shape: per micro-batch one map-keys parse + a per-row explode
   * of the |declared-fields| literal spine, aggregated to the bounded
   * (topic, field) key space; the alert collect is ≤ |topics|·|fields|
-  * rows; the sink is batch_id-partitioned dynamic overwrite, so
-  * checkpoint replay is idempotent like the DLQ and SchemaWatch. */
+  * rows; the alert log is a [[BatchLog]], so checkpoint replay is
+  * idempotent. */
 object PayloadWatch {
 
   /** The serializer's declared after-record fields. */
@@ -63,8 +63,7 @@ object PayloadWatch {
       wirePath: String,
       alertPath: String,
       checkpointPath: String): StreamingQuery =
-    spark.readStream.schema(WireSource.wireSchema)
-      .option("maxFilesPerTrigger", "4").json(wirePath)
+    WireSource.readRawStream(spark, wirePath)
       .writeStream
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -73,13 +72,12 @@ object PayloadWatch {
         if (rows.nonEmpty) {
           val spark = batch.sparkSession
           import spark.implicits._
-          rows.toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2),
-              r.getLong(3), r.getDouble(4), r.getLong(5), batchId))
-            .toDF("topic", "field", "n_msgs", "n_present", "presence",
-              "first_missing_offset", "batch_id")
-            .write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(alertPath)
+          BatchLog.write(
+            rows.toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2),
+                r.getLong(3), r.getDouble(4), r.getLong(5)))
+              .toDF("topic", "field", "n_msgs", "n_present", "presence",
+                "first_missing_offset"),
+            alertPath, batchId)
         }
         ()
       }

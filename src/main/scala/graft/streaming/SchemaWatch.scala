@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * the apply stays total, the watch sees what it ignored.
   *
   * Scale shape: per micro-batch one map-keys explode + a groupBy on the
-  * (tiny) unknown-field key space; the alert sink is batch_id-partitioned
-  * dynamic overwrite, so checkpoint replay is idempotent like the DLQ.
+  * (tiny) unknown-field key space; the alert log is a [[BatchLog]], so
+  * checkpoint replay is idempotent.
   * New fields arrive as strings (a schemaless JSON wire carries no type),
   * matching the reference's VARCHAR-first evolution. */
 object SchemaWatch {
@@ -55,8 +55,7 @@ object SchemaWatch {
       checkpointPath: String,
       table: String = "events",
       dialect: SchemaDdl.Dialect = SchemaDdl.Postgres): StreamingQuery =
-    spark.readStream.schema(WireSource.wireSchema)
-      .option("maxFilesPerTrigger", "4").json(wirePath)
+    WireSource.readRawStream(spark, wirePath)
       .writeStream
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -73,14 +72,12 @@ object SchemaWatch {
             // one field per plan so each alert row carries ITS statement
             val plan = SchemaDdl.alterTableDdl(table,
               StructType(target.fields :+ StructField(f, StringType)), target, dialect)
-            (f, r.getLong(1), r.getLong(2), plan.statements.mkString("; "), batchId)
+            (f, r.getLong(1), r.getLong(2), plan.statements.mkString("; "))
           }.toSeq
           val spark = batch.sparkSession
           import spark.implicits._
-          alerts.toDF("field", "n_events", "first_offset", "alter_ddl", "batch_id")
-            .write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(alertPath)
+          BatchLog.write(alerts.toDF("field", "n_events", "first_offset", "alter_ddl"),
+            alertPath, batchId)
         }
         ()
       }

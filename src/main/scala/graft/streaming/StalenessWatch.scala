@@ -24,8 +24,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * Scale shape: each micro-batch reduces to ≤|tables| (table, max ms)
   * rows before anything leaves the executors; the state table is
   * |tables| rows merged monotonically (max), so an at-least-once replay
-  * can never move it backwards; the alert log is batch_id-partitioned
-  * dynamic overwrite — the [[CorpusAdmission]] idempotency pattern.
+  * can never move it backwards; the alert log is a [[BatchLog]].
   */
 object StalenessWatch {
 
@@ -54,11 +53,19 @@ object StalenessWatch {
       .map(r => r.getString(0) -> Cadence(r.getDouble(1), r.getLong(2)))
       .toMap
 
-  private def readState(spark: SparkSession, cfg: Config): Map[String, Long] =
-    try {
-      spark.read.parquet(cfg.statePath)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    } catch { case _: Throwable => Map.empty }
+  private val stateSchema = StructType(Seq(
+    StructField("table_name", StringType),
+    StructField("last_ms", LongType)))
+
+  /** The last-seen table; absent before the first batch. A state that
+    * exists but cannot be read fails the batch — read as empty, the
+    * batch would overwrite every other table's last-seen time. */
+  private def readState(spark: SparkSession, cfg: Config): Map[String, Long] = {
+    val p = new org.apache.hadoop.fs.Path(cfg.statePath)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Map.empty
+    else spark.read.schema(stateSchema).parquet(cfg.statePath)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
 
   /** Process one micro-batch: merge last-seen, score every declared
     * table against its frozen cadence, append the batch's alert rows. */
@@ -79,16 +86,14 @@ object StalenessWatch {
           case Some(last) =>
             val silence = hwm - last
             val status = if (silence > c.maxGapMs) "overdue" else "ok"
-            (t, last, silence, silence.toDouble / c.meanGapMs, status, batchId)
+            (t, last, silence, silence.toDouble / c.meanGapMs, status)
           case None =>
-            (t, -1L, -1L, Double.NaN, "missing", batchId)
+            (t, -1L, -1L, Double.NaN, "missing")
         }
       }
-      alerts.toDF("table_name", "last_ms", "silence_ms", "staleness_score",
-          "status", "batch_id")
-        .write.partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(cfg.alertPath)
+      BatchLog.write(
+        alerts.toDF("table_name", "last_ms", "silence_ms", "staleness_score", "status"),
+        cfg.alertPath, batchId)
       merged.toSeq.toDF("table_name", "last_ms")
         .coalesce(1).write.mode("overwrite").parquet(cfg.statePath)
     }
@@ -96,7 +101,7 @@ object StalenessWatch {
 
   /** The alert log (all batches). */
   def alerts(spark: SparkSession, cfg: Config): DataFrame =
-    spark.read.parquet(cfg.alertPath)
+    BatchLog.history(spark, cfg.alertPath)
 
   /** Start the watch over a (table_name, ms) event stream. */
   def start(spark: SparkSession, eventsPath: String, cfg: Config): StreamingQuery =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
   * `cdc_order_violations` / `stream_backfill`'s job, and the reference
   * semantics (an append-only audit log) match the in-order contract.
   *
-  * Idempotency: per-batch state SNAPSHOTS partitioned by batch_id
+  * Idempotency: per-batch state SNAPSHOTS in a [[BatchLog]]
   * (state-after-batch-N), each derived from the N−1 snapshot — an
   * at-least-once replay of batch N overwrites its own snapshot from the
   * same N−1 base and converges to the same head. State is O(|keys|). */
@@ -39,16 +39,6 @@ object StreamAuditChain {
     StructField("user_id", LongType),
     StructField("n_links", LongType),
     StructField("chain_hash", StringType)))
-
-  private def readSnapshot(spark: SparkSession, cfg: Config, batchId: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(chainsPath(cfg))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (batchId >= 0 && fs.exists(p)) {
-      val all = spark.read.schema(chainSchema.add("batch_id", LongType))
-        .parquet(chainsPath(cfg))
-      all.where(col("batch_id") === batchId).drop("batch_id")
-    } else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], chainSchema)
-  }
 
   def start(spark: SparkSession, cfg: Config): StreamingQuery =
     graft.sources.WireSource.readStream(spark, cfg.wirePath)
@@ -76,7 +66,7 @@ object StreamAuditChain {
         // key's share of one micro-batch, never its full history
         transform(array_sort(collect_list(struct(col("t"), col("seq"), col("payload")))),
           x => x.getField("payload")).as("ps"))
-    val prior = readSnapshot(spark, cfg, batchId - 1)
+    val prior = BatchLog.snapshot(spark, chainsPath(cfg), chainSchema, batchId - 1)
     val next = prior
       .join(newLinks, Seq("user_id"), "full")
       .select(
@@ -89,14 +79,11 @@ object StreamAuditChain {
           // batch operator's literal seed
           coalesce(col("chain_hash"), lit("graft-chain-seed")),
           (acc, x) => md5(concat(acc, x))).as("chain_hash"))
-      .withColumn("batch_id", lit(batchId))
-    next.write.partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(chainsPath(cfg))
+    BatchLog.write(next, chainsPath(cfg), batchId)
   }
 
   /** Read back the chain state after `batchId` — the streamed
     * [[graft.cdc.Monitoring.auditChain]]. */
   def chains(spark: SparkSession, cfg: Config, batchId: Long): DataFrame =
-    readSnapshot(spark, cfg, batchId).orderBy("user_id")
+    BatchLog.snapshot(spark, chainsPath(cfg), chainSchema, batchId).orderBy("user_id")
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -30,11 +30,10 @@ import org.apache.spark.sql.types._
   * shuffle key) and run over the BATCH's rows only; the cross-batch fold
   * windows run over islands — bounded by the number of observed
   * discontinuities, never the event count (a healthy topic is ONE island
-  * however many trillions of offsets it carries). Writes are
-  * batch_id-partitioned dynamic overwrite and the fold reads only
-  * batches ≤ its own id — the [[StreamLsnTrend]]/[[ConsumerLag]]
-  * idempotency pattern: an at-least-once replay overwrites its own
-  * partition and never double-counts.
+  * however many trillions of offsets it carries). All three logs are
+  * [[BatchLog]]s and the fold reads only batches ≤ its own id: an
+  * at-least-once replay overwrites its own partition and never
+  * double-counts.
   */
 object StreamBackfill {
 
@@ -51,15 +50,6 @@ object StreamBackfill {
     StructField("topic", StringType),
     StructField("start", LongType),
     StructField("end", LongType)))
-
-  private def readStateOr(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      spark.read.schema(schema.add("batch_id", LongType)).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema.add("batch_id", LongType))
-  }
 
   /** One batch of (topic, offset) arrivals reduced to its contiguous
     * observed ranges — the gaps-and-islands constant `offset − row_number`
@@ -97,8 +87,7 @@ object StreamBackfill {
   }
 
   def start(spark: SparkSession, cfg: Config): StreamingQuery =
-    spark.readStream.schema(graft.sources.WireSource.wireSchema)
-      .option("maxFilesPerTrigger", "4").json(cfg.wirePath)
+    graft.sources.WireSource.readRawStream(spark, cfg.wirePath)
       .writeStream
       .option("checkpointLocation", cfg.checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -111,17 +100,12 @@ object StreamBackfill {
     * reports. Exposed for direct batch use (replay tests drive it). */
   private[graft] def monitorBatch(
       spark: SparkSession, cfg: Config, batch: DataFrame, batchId: Long): Unit = {
-    val islands = batchIslands(batch).withColumn("batch_id", lit(batchId))
-    def writePartitioned(df: DataFrame, path: String): Unit =
-      df.write.partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(path)
-    writePartitioned(islands, islandsPath(cfg))
+    val islands = batchIslands(batch)
+    BatchLog.write(islands, islandsPath(cfg), batchId)
     val merged = mergeIslands(
-      readStateOr(spark, islandsPath(cfg), islandSchema)
-        .where(col("batch_id") < batchId)
+      BatchLog.before(spark, islandsPath(cfg), islandSchema, batchId)
         .select("topic", "start", "end")
-        .unionByName(islands.select("topic", "start", "end")))
+        .unionByName(islands))
     // inter-island holes: the gap BEFORE each island (from the previous
     // island's end) — the backfill ranges, and the gap stats' raw rows
     val w = org.apache.spark.sql.expressions.Window
@@ -134,8 +118,7 @@ object StreamBackfill {
         (col("prev_end") + 1).as("gap_from"),
         (col("start") - 1).as("gap_to"),
         (col("start") - col("prev_end") - 1).as("n_missing"))
-      .withColumn("batch_id", lit(batchId))
-    writePartitioned(ranges, rangesPath(cfg))
+    BatchLog.write(ranges, rangesPath(cfg), batchId)
     val gaps = holed
       .groupBy("topic")
       .agg(
@@ -146,21 +129,18 @@ object StreamBackfill {
           - sum(col("end") - col("start") + 1)).as("n_missing"),
         coalesce(max(col("start") - col("prev_end") - 1), lit(0L)).as("max_gap"),
         count(when(col("prev_end").isNotNull, 1)).as("n_gaps"))
-      .withColumn("batch_id", lit(batchId))
-    writePartitioned(gaps, gapsPath(cfg))
+    BatchLog.write(gaps, gapsPath(cfg), batchId)
   }
 
   /** Read back the per-batch cumulative offset-continuity report — the
     * streamed [[graft.cdc.Monitoring.offsetGaps]]. */
   def gaps(spark: SparkSession, cfg: Config): DataFrame =
-    spark.read.parquet(gapsPath(cfg))
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    BatchLog.history(spark, gapsPath(cfg))
       .orderBy("batch_id", "topic")
 
   /** Read back the per-batch backfill plan — the streamed
     * [[graft.cdc.Monitoring.backfillRanges]]. */
   def ranges(spark: SparkSession, cfg: Config): DataFrame =
-    spark.read.parquet(rangesPath(cfg))
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    BatchLog.history(spark, rangesPath(cfg))
       .orderBy("batch_id", "topic", "gap_from")
 }

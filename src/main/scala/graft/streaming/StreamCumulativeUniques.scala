@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -32,11 +32,11 @@ import org.apache.spark.sql.types._
   * cumulative/n_new columns, and the spec separately bounds n_active
   * against the exact per-day count.
   *
-  * Idempotency: per-batch state snapshots partitioned by batch_id, each
+  * Idempotency: per-batch state snapshots in a [[BatchLog]], each
   * derived from the N−1 snapshot — an at-least-once replay of batch N
   * overwrites its own snapshot from the same base and converges
   * (HLL union is idempotent: re-merging the same sketch changes
-  * nothing, the [[StreamStatusBoard]] snapshot discipline). */
+  * nothing). */
 object StreamCumulativeUniques {
 
   final case class Config(statePath: String, checkpointPath: String,
@@ -53,16 +53,6 @@ object StreamCumulativeUniques {
   private val sketchSchema = StructType(Seq(
     StructField("day", TimestampType),
     StructField("sk", BinaryType)))
-
-  private def readSnapshot(spark: SparkSession, cfg: Config, batchId: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(sketchesPath(cfg))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (batchId >= 0 && fs.exists(p))
-      spark.read.schema(sketchSchema.add("batch_id", LongType))
-        .parquet(sketchesPath(cfg))
-        .where(col("batch_id") === batchId).drop("batch_id")
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sketchSchema)
-  }
 
   def start(spark: SparkSession, eventsPath: String, cfg: Config): StreamingQuery =
     spark.readStream.schema(eventSchema)
@@ -83,21 +73,18 @@ object StreamCumulativeUniques {
       .select(date_trunc("DAY", col("ts")).as("day"), col("user_id"))
       .groupBy("day")
       .agg(hll_sketch_agg(col("user_id"), lit(cfg.lgConfigK)).as("sk"))
-    val next = readSnapshot(spark, cfg, batchId - 1)
+    val next = BatchLog.snapshot(spark, sketchesPath(cfg), sketchSchema, batchId - 1)
       .unionByName(batchSketches)
       .groupBy("day")
       .agg(hll_union_agg(col("sk"), lit(true)).as("sk"))
-    next.withColumn("batch_id", lit(batchId))
-      .write.partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(sketchesPath(cfg))
+    BatchLog.write(next, sketchesPath(cfg), batchId)
   }
 
   /** The cumulative-uniques board after `batchId` — the batch operator's
     * exact tail over the ≤|days| day-sketch state. */
   def board(spark: SparkSession, cfg: Config, batchId: Long): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy("day")
-    readSnapshot(spark, cfg, batchId)
+    BatchLog.snapshot(spark, sketchesPath(cfg), sketchSchema, batchId)
       .withColumn("n_active_approx",
         hll_sketch_estimate(col("sk")))
       .withColumn("cum_uniques_approx",

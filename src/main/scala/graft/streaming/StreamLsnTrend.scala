@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -19,14 +19,14 @@ import org.apache.spark.sql.types._
   * reduces to (bucket_id, bucket_max LSN, n_arrived) rows; max and count
   * are associative, so folding all batch deltas with a bucket-keyed
   * re-aggregation reproduces the batch operator's per-bucket aggregate
-  * EXACTLY, and the spine/running-max/lag windows then run over the same
-  * bounded |buckets|-row trend — the emitted report matches the batch op
+  * EXACTLY, and the spine/running-max/lag windows (SHARED code:
+  * Monitoring.lsnTrendFromBuckets) then run over the same bounded
+  * |buckets|-row trend — the emitted report matches the batch op
   * bit-for-bit on an in-order replay (the spec pins that equality).
   *
   * Scale shape: state rows per batch are bounded by the batch's bucket
-  * span (≤ |buckets| total after folding); writes are batch_id-partitioned
-  * dynamic overwrite and the report folds only batches ≤ its own id — the
-  * [[ConsumerLag]]/[[LagSla]] idempotency pattern, so an at-least-once
+  * span (≤ |buckets| total after folding); both logs are [[BatchLog]]s
+  * and the report folds only batches ≤ its own id, so an at-least-once
   * replay overwrites its own partition and never double-counts.
   */
 object StreamLsnTrend {
@@ -45,15 +45,6 @@ object StreamLsnTrend {
     StructField("bucket_id", LongType),
     StructField("bucket_max", LongType),
     StructField("n_arrived", LongType)))
-
-  private def readStateOr(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      spark.read.schema(schema.add("batch_id", LongType)).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema.add("batch_id", LongType))
-  }
 
   /** One batch of (ts_ms, lsn) arrivals reduced to the per-bucket grain:
     * the bucket's max LSN and arrival count — everything the fold needs. */
@@ -78,46 +69,23 @@ object StreamLsnTrend {
     * Exposed for direct batch use (replay tests drive it directly). */
   private[graft] def monitorBatch(
       spark: SparkSession, cfg: Config, batch: DataFrame, batchId: Long): Unit = {
-    val deltas = batchDeltas(batch, cfg.bucketMs).withColumn("batch_id", lit(batchId))
-    def writePartitioned(df: DataFrame, path: String): Unit =
-      df.write.partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(path)
-    writePartitioned(deltas, deltasPath(cfg))
+    val deltas = batchDeltas(batch, cfg.bucketMs)
+    BatchLog.write(deltas, deltasPath(cfg), batchId)
     // fold: max/count are associative, so the bucket re-aggregation over
     // all deltas IS the batch operator's per-bucket aggregate
-    val agg = readStateOr(spark, deltasPath(cfg), deltaSchema)
-      .where(col("batch_id") < batchId)
+    val agg = BatchLog.before(spark, deltasPath(cfg), deltaSchema, batchId)
+      .select("bucket_id", "bucket_max", "n_arrived")
       .unionByName(deltas)
       .groupBy("bucket_id")
       .agg(max(col("bucket_max")).as("bucket_max"),
         sum(col("n_arrived")).as("n_arrived"))
-    // identical spine + window tail to Monitoring.lsnLatencyTrend — over
-    // the bounded pre-aggregated trend only (the window-audit exception)
-    val w = org.apache.spark.sql.expressions.Window.orderBy("bucket_id")
-    val cum = w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val spine = agg.agg(min(col("bucket_id")).as("lo"), max(col("bucket_id")).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("bucket_id"))
-    val report = spine.join(agg, Seq("bucket_id"), "left")
-      .withColumn("n_arrived", coalesce(col("n_arrived"), lit(0L)))
-      .withColumn("source_lsn", max(col("bucket_max")).over(cum))
-      .withColumn("processed_lsn", lag(col("source_lsn"), cfg.horizonBuckets).over(w))
-      .withColumn("cum_n", sum(col("n_arrived")).over(cum))
-      .withColumn("n_pending",
-        col("cum_n") - coalesce(lag(col("cum_n"), cfg.horizonBuckets).over(w), lit(0L)))
-      .select(
-        timestamp_millis(col("bucket_id") * cfg.bucketMs).as("bucket"),
-        col("source_lsn"),
-        coalesce(col("processed_lsn"), lit(0L)).as("processed_lsn"),
-        (col("source_lsn") - coalesce(col("processed_lsn"), lit(0L))).as("lsn_gap"),
-        col("n_arrived"), col("n_pending"))
-      .withColumn("batch_id", lit(batchId))
-    writePartitioned(report, reportPath(cfg))
+    BatchLog.write(
+      graft.cdc.Monitoring.lsnTrendFromBuckets(agg, cfg.bucketMs, cfg.horizonBuckets),
+      reportPath(cfg), batchId)
   }
 
   /** Read back the per-batch cumulative trend report. */
   def trend(spark: SparkSession, cfg: Config): DataFrame =
-    spark.read.parquet(reportPath(cfg))
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    BatchLog.history(spark, reportPath(cfg))
       .orderBy("batch_id", "bucket")
 }

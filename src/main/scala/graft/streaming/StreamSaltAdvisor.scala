@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -25,11 +25,10 @@ import org.apache.spark.sql.types._
   * Scale shape: delta rows per batch are bounded by the batch's key
   * span; the fold is one map-side-combined sum keyed by pk (the same
   * shuffle the batch op pays once) and the decision tail runs over the
-  * count-of-counts table, bounded by distinct count VALUES. Writes are
-  * batch_id-partitioned dynamic overwrite and the fold takes only
-  * batches ≤ its own id — the [[ConsumerLag]]/[[LagSla]] idempotency
-  * pattern, so an at-least-once replay overwrites its own partition and
-  * never double-counts.
+  * count-of-counts table, bounded by distinct count VALUES. Both logs
+  * are [[BatchLog]]s and the fold takes only batches ≤ its own id, so an
+  * at-least-once replay overwrites its own partition and never
+  * double-counts.
   */
 object StreamSaltAdvisor {
 
@@ -45,15 +44,6 @@ object StreamSaltAdvisor {
   private val deltaSchema = StructType(Seq(
     StructField("pk", LongType),
     StructField("n_events", LongType)))
-
-  private def readStateOr(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      spark.read.schema(schema.add("batch_id", LongType)).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema.add("batch_id", LongType))
-  }
 
   /** One batch of pk arrivals reduced to the per-key grain. */
   private[graft] def batchDeltas(batch: DataFrame): DataFrame =
@@ -77,36 +67,20 @@ object StreamSaltAdvisor {
     * Exposed for direct batch use (replay tests drive it directly). */
   private[graft] def monitorBatch(
       spark: SparkSession, cfg: Config, batch: DataFrame, batchId: Long): Unit = {
-    val deltas = batchDeltas(batch).withColumn("batch_id", lit(batchId))
-    def writePartitioned(df: DataFrame, path: String): Unit =
-      df.write.partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(path)
-    writePartitioned(deltas, deltasPath(cfg))
+    val deltas = batchDeltas(batch)
+    BatchLog.write(deltas, deltasPath(cfg), batchId)
     // fold: counts are associative — the pk-keyed sum over all deltas IS
     // the batch operator's per-key count table
-    val perKey = readStateOr(spark, deltasPath(cfg), deltaSchema)
-      .where(col("batch_id") < batchId)
+    val perKey = BatchLog.before(spark, deltasPath(cfg), deltaSchema, batchId)
+      .select("pk", "n_events")
       .unionByName(deltas)
       .groupBy("pk")
       .agg(sum(col("n_events")).as("cnt"))
-    val report = graft.cdc.Monitoring
-      .saltAdvisorFromPerKey(perKey, cfg.targetPerTask)
-      .withColumn("batch_id", lit(batchId))
-    writePartitioned(report, reportPath(cfg))
+    BatchLog.write(graft.cdc.Monitoring.saltAdvisorFromPerKey(perKey, cfg.targetPerTask),
+      reportPath(cfg), batchId)
   }
 
   /** The emitted per-batch panel history (one row per micro-batch). */
-  private[graft] def panel(spark: SparkSession, cfg: Config): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("n_keys", LongType),
-      StructField("n_events", LongType),
-      StructField("mean_events_per_key", DoubleType),
-      StructField("p99_events_per_key", LongType),
-      StructField("max_events_per_key", LongType),
-      StructField("skew_ratio", DoubleType),
-      StructField("recommended_salt", LongType),
-      StructField("needs_salting", BooleanType)))
-    readStateOr(spark, reportPath(cfg), schema)
-  }
+  private[graft] def panel(spark: SparkSession, cfg: Config): DataFrame =
+    BatchLog.history(spark, reportPath(cfg))
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.cdc.Cdc
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -34,7 +34,7 @@ import org.apache.spark.sql.types._
   * counters are order-free (sums/maxes/set union), and lag math happens
   * only at read time (spec-pinned 3-chunk replay).
   *
-  * Idempotency: per-batch state SNAPSHOTS partitioned by batch_id, each
+  * Idempotency: per-batch state SNAPSHOTS in [[BatchLog]]s, each
   * derived from the N−1 snapshot — an at-least-once replay of batch N
   * overwrites its own snapshot from the same base and converges. */
 object StreamStatusBoard {
@@ -65,16 +65,6 @@ object StreamStatusBoard {
   private val keysSchema = StructType(Seq(
     StructField("table_name", StringType),
     StructField("user_id", LongType)))
-
-  private def readSnapshot(spark: SparkSession, path: String,
-      schema: StructType, batchId: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (batchId >= 0 && fs.exists(p))
-      spark.read.schema(schema.add("batch_id", LongType)).parquet(path)
-        .where(col("batch_id") === batchId).drop("batch_id")
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-  }
 
   def start(spark: SparkSession, eventsPath: String, cfg: Config): StreamingQuery =
     spark.readStream.schema(eventSchema)
@@ -123,23 +113,17 @@ object StreamStatusBoard {
     val batchRollup = ev.groupBy("table_name", "ts")
       .agg(count(lit(1)).as("n_events"),
         sum(when(col("op") === "d", 1L).otherwise(0L)).as("n_deletes"))
-    val nextRollup = readSnapshot(spark, rPath, rollupSchema, batchId - 1)
+    val nextRollup = BatchLog.snapshot(spark, rPath, rollupSchema, batchId - 1)
       .unionByName(batchRollup)
       .groupBy("table_name", "ts")
       .agg(sum(col("n_events")).as("n_events"),
         sum(col("n_deletes")).as("n_deletes"))
-    nextRollup.withColumn("batch_id", lit(batchId))
-      .write.partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(rPath)
+    BatchLog.write(nextRollup, rPath, batchId)
     // distinct (table, user) set: monotone union
-    val nextKeys = readSnapshot(spark, keysPath(cfg, coarse), keysSchema, batchId - 1)
+    val nextKeys = BatchLog.snapshot(spark, keysPath(cfg, coarse), keysSchema, batchId - 1)
       .unionByName(ev.select("table_name", "user_id"))
       .dropDuplicates("table_name", "user_id")
-    nextKeys.withColumn("batch_id", lit(batchId))
-      .write.partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(keysPath(cfg, coarse))
+    BatchLog.write(nextKeys, keysPath(cfg, coarse), batchId)
   }
 
   /** The board after `batchId` — bit-parity with
@@ -156,9 +140,9 @@ object StreamStatusBoard {
 
   private def boardFrom(spark: SparkSession, cfg: Config, batchId: Long,
       coarse: Boolean): DataFrame = {
-    val rollup = readSnapshot(spark,
+    val rollup = BatchLog.snapshot(spark,
       if (coarse) rollupMinutePath(cfg) else rollupPath(cfg), rollupSchema, batchId)
-    val keys = readSnapshot(spark, keysPath(cfg, coarse), keysSchema, batchId)
+    val keys = BatchLog.snapshot(spark, keysPath(cfg, coarse), keysSchema, batchId)
       .groupBy("table_name").agg(count(lit(1)).as("n_keys"))
     val hwm = rollup.agg(max(col("ts")).as("hwm"))
     rollup.crossJoin(broadcast(hwm))

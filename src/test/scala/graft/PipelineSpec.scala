@@ -3,6 +3,8 @@ package graft
 import graft.cdc.{Cdc, Materialize}
 import graft.sources.WireSource
 import graft.sinks.TableSink
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -35,29 +37,41 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("pipeline routes poisoned messages to the DLQ, applies the rest") {
-    val base = Files.createTempDirectory("dlq").toString
-    WireSource.publish(spark, dir, s"$base/wire")
-    // inject a poisoned wire file: valid (topic, offset) but garbage envelope
-    Files.writeString(
-      java.nio.file.Path.of(s"$base/wire/poison.json"),
-      """{"topic":"graft.public.events","offset":999999999,"value":"NOT JSON"}""" + "\n")
+    // the single-table and the fanout pipeline share the guard; applied
+    // keys are (state table, key), "" naming the single-table state
+    def liveKeys(table: String, path: String): Set[(String, Long)] =
+      TableSink.readLive(spark, path).collect().map(r => table -> r.getLong(0)).toSet
+    val starts = Seq[(String, (SparkSession, Pipeline.Config) => StreamingQuery,
+        String => Set[(String, Long)], Set[(String, Long)])](
+      ("start", Pipeline.start, liveKeys("", _),
+        Materialize.latestSnapshot(Cdc.changelog(spark, dir))
+          .collect().map(r => "" -> r.getLong(0)).toSet),
+      ("startFanout", Pipeline.startFanout,
+        state => new java.io.File(state).listFiles().filter(_.isDirectory)
+          .flatMap(t => liveKeys(t.getName, t.getPath)).toSet,
+        Materialize.fanoutApply(Cdc.parseEnvelope(Cdc.toWire(spark, dir)))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toSet))
+    starts.foreach { case (name, start, applied, expected) =>
+      val base = Files.createTempDirectory("dlq").toString
+      WireSource.publish(spark, dir, s"$base/wire")
+      // inject a poisoned wire file: valid (topic, offset) but garbage envelope
+      Files.writeString(
+        java.nio.file.Path.of(s"$base/wire/poison.json"),
+        """{"topic":"graft.public.events","offset":999999999,"value":"NOT JSON"}""" + "\n")
 
-    val q = Pipeline.start(spark, Pipeline.Config(
-      wirePath = s"$base/wire",
-      statePath = s"$base/state",
-      checkpointPath = s"$base/ckpt",
-      dlqPath = Some(s"$base/dlq")))
-    q.processAllAvailable()
-    q.stop()
+      val q = start(spark, Pipeline.Config(
+        wirePath = s"$base/wire",
+        statePath = s"$base/state",
+        checkpointPath = s"$base/ckpt",
+        dlqPath = Some(s"$base/dlq")))
+      q.processAllAvailable()
+      q.stop()
 
-    val dlq = spark.read.parquet(s"$base/dlq").collect()
-    assert(dlq.map(_.getAs[Long]("offset")).toSet === Set(999999999L))
-    // the apply still processed everything else
-    val state = TableSink.readLive(spark, s"$base/state")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val expected = Materialize.latestSnapshot(Cdc.changelog(spark, dir))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(state.keySet === expected.keySet)
+      val dlq = spark.read.parquet(s"$base/dlq").collect()
+      assert(dlq.map(_.getAs[Long]("offset")).toSet === Set(999999999L), name)
+      // the apply still processed everything else
+      assert(applied(s"$base/state") === expected, name)
+    }
   }
 
   test("fanout pipeline materializes one state table per routed table") {

@@ -66,6 +66,26 @@ class StalenessWatchSpec extends AnyFunSuite {
       "b is 490ms silent against the replayed clock")
   }
 
+  test("an unreadable state fails the batch and leaves the state files untouched") {
+    val c = cfg()
+    StalenessWatch.watchBatch(spark, c, Seq(("a", 0L), ("b", 10L)).toDF("table_name", "ms"), 0L)
+    val state = java.nio.file.Paths.get(c.statePath)
+    java.nio.file.Files.write(state.resolve("part-99999-garbage.parquet"),
+      "not a parquet file".getBytes)
+    def files(): Map[String, Seq[Byte]] = {
+      val ls = java.nio.file.Files.list(state)
+      try ls.toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .map(p => p.getFileName.toString -> java.nio.file.Files.readAllBytes(p).toSeq).toMap
+      finally ls.close()
+    }
+    val before = files()
+    // read as "no state", batch 1 would overwrite b's last-seen time
+    intercept[Exception] {
+      StalenessWatch.watchBatch(spark, c, Seq(("a", 500L)).toDF("table_name", "ms"), 1L)
+    }
+    assert(files() === before)
+  }
+
   test("handshake: the frozen map derives from the batch staleness audit's output") {
     val cadence = StalenessWatch.cadenceOf(Monitoring.tableStaleness(spark, dir))
     assert(cadence.nonEmpty)
