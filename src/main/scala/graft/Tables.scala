@@ -196,7 +196,25 @@ object Tables {
     * a checkpoint dir where executor loss must be survivable. */
   private[graft] def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
-  /** Local session with the defaults every entry point shares. */
+  /** Local session with the defaults every entry point shares.
+    *
+    * Generated-code cache: Spark keeps compiled whole-stage classes in one
+    * JVM-wide LRU (`CodeGenerator`'s cache) of 8,192 entries here. The
+    * default of 100 is smaller than one round of a handful of registry
+    * queries (the 9-query benchmark mix needs about 170 classes), so a
+    * process that re-runs its queries recompiled nearly every stage on
+    * every run. The size rule: the next power of two above the distinct
+    * classes of one full registry pass, 4,213 on the graftbench fixture,
+    * so every query compiles its stages once per JVM. Cost: about 37 KB of
+    * metaspace per class (73 → 229 MB over that pass), so the cache holds
+    * at most about 300 MB, and only a process that runs most of the
+    * registry gets there; the benchmark mix keeps about 300 classes.
+    *
+    * The conf is static, so it is set here and never in [[scanConfs]]
+    * (loadSerial's `conf.set` repair would throw on it). Spark sizes the
+    * cache ONCE per JVM, from the conf active at the first codegen: a
+    * session built later in the same JVM with another value does not
+    * resize it. */
   def localSession(appName: String, cpus: Int = 4): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -205,6 +223,7 @@ object Tables {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
     scanConfs.foldLeft(b) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
   }
 }

@@ -44,6 +44,16 @@ object Ann {
     * partition order a checkpoint re-read yields cannot change a bit. */
   private def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
+  /** The query vector's row (vec_id = 0) of `emb`. vec_id is the table's
+    * key, so this is the oracle's `WHERE vec_id = 0` row. The top-1 keeps
+    * the side provably one row for the broadcast joins that take it, and
+    * plans as TakeOrderedAndProject, which runs without whole-stage
+    * codegen. A plain `limit(1)` plans codegen'd limits instead, whose
+    * counters Spark names from a JVM-wide sequence: their stages generate
+    * new code, and compile again, on every construction. */
+  private def queryVector(emb: DataFrame): DataFrame =
+    emb.where(col("vec_id") === 0).orderBy("vec_id").limit(1)
+
   /** Index-ordered fold: Σ a[i]·b[i] as exact-ordered double ops. */
   private def dotFold(a: Column, b: Column): Column =
     aggregate(
@@ -236,7 +246,7 @@ object Ann {
   /** Exact cosine top-k against the vec_id=0 query vector. */
   def bruteForceTopK(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    val q = emb.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
+    val q = queryVector(emb).select(col("embedding").as("qe"))
     // the query never ranks against itself: a guaranteed cosine-1.0
     // self-match would waste a result slot and bias recall gates by 1/k
     emb.where(col("vec_id") =!= 0).crossJoin(broadcast(q))
@@ -267,7 +277,7 @@ object Ann {
     * scan, and both branches end in TakeOrderedAndProject. */
   def filteredTopK(spark: SparkSession, dir: String, label: Int = 1, k: Int = 10): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    val q = emb.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
+    val q = queryVector(emb).select(col("embedding").as("qe"))
     val filtered = emb.where(col("vec_id") =!= 0 && col("label") === label)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), col("label"), cosine(spark, "embedding", "qe").as("cosine"))
@@ -311,7 +321,7 @@ object Ann {
     * the selective filter means only matches reach the output sort. */
   def rangeSearch(spark: SparkSession, dir: String, threshold: Double = 0.25): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    val q = emb.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
+    val q = queryVector(emb).select(col("embedding").as("qe"))
     emb.crossJoin(broadcast(q))
       .select(col("vec_id"), cosine(spark, "embedding", "qe").as("cosine"))
       .where(col("cosine") >= threshold && col("vec_id") =!= 0)
@@ -381,7 +391,7 @@ object Ann {
   def lshTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
       .withColumn("bucket", signCode(col("embedding")))
-    val q = emb.where(col("vec_id") === 0).limit(1)
+    val q = queryVector(emb)
       .select(col("embedding").as("qe"), col("bucket").as("qbucket"))
     emb.where(col("vec_id") =!= 0)
       .join(broadcast(q), col("bucket") === col("qbucket"))
@@ -405,7 +415,7 @@ object Ann {
   def multiprobeTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
       .withColumn("bucket", signCode(col("embedding")))
-    val qRow = emb.where(col("vec_id") === 0).limit(1)
+    val qRow = queryVector(emb)
       .select(col("embedding").as("qe"), col("bucket").as("qbucket"))
     val probeCodes = explode(array(
       col("qbucket") +: (0 until 8).map(j => col("qbucket").bitwiseXOR(lit(1L << j))): _*)).as("probe")
@@ -437,7 +447,7 @@ object Ann {
     * centroid score, and only those partitions are exact-scored. */
   def ivfTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    val q = emb.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
+    val q = queryVector(emb).select(col("embedding").as("qe"))
 
     val centroids = emb
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
@@ -1060,7 +1070,7 @@ object Ann {
   def matryoshkaRecall(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
-    val q = emb.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
+    val q = queryVector(emb).select(col("embedding").as("qe"))
     val full = bruteForceTopK(spark, dir, k).select(col("vec_id"), lit(1L).as("in_full"))
     val levels = Seq(4, 2, 1)
     val perLevel = levels.map { den =>
@@ -1118,7 +1128,7 @@ object Ann {
     val levels = Seq(1, 3, 5, 9)
     val emb = Tables.load(spark, dir, "embeddings")
       .withColumn("bucket", signCode(col("embedding")))
-    val q = emb.where(col("vec_id") === 0).limit(1)
+    val q = queryVector(emb)
       .select(col("embedding").as("qe"), col("bucket").as("qbucket"))
     val brute = bruteForceTopK(spark, dir, k).select(col("vec_id"), lit(1).as("in_brute"))
     val tagged = levels.map { p =>
@@ -1323,7 +1333,7 @@ object Ann {
   def pqRecall(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
-    val q = emb.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
+    val q = queryVector(emb).select(col("embedding").as("qe"))
     val exact = emb.where(col("vec_id") =!= 0).crossJoin(broadcast(q))
       .select(col("vec_id"), expr("graft_l2sq(embedding, qe)").as("d"))
       .orderBy(col("d").asc, col("vec_id")).limit(k)
@@ -1466,7 +1476,7 @@ object Ann {
   def pqRerank(spark: SparkSession, dir: String, k: Int = 10, shortlist: Int = 50): DataFrame = {
     GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
-    val q = emb.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
+    val q = queryVector(emb).select(col("embedding").as("qe"))
     val short = pqTopK(spark, dir, shortlist).select("vec_id")
     short.join(emb, "vec_id") // raw-vector fetch for the shortlist only
       .crossJoin(broadcast(q))
@@ -1499,7 +1509,7 @@ object Ann {
     ivfpqTopKOf(spark, Tables.load(spark, dir, "embeddings"), k)
 
   private def ivfpqTopKOf(spark: SparkSession, emb: DataFrame, k: Int): DataFrame = {
-    val q = emb.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
+    val q = queryVector(emb).select(col("embedding").as("qe"))
     val centroids = emb
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .groupBy("label", "pos")
@@ -1561,7 +1571,7 @@ object Ann {
         explode(sequence(lit(0), lit(m - 1))).as("s"))
       .select(col("s"), col("c"),
         slice(col("embedding"), col("s") * subDim + 1, lit(subDim)).as("v"))
-    val q = cbSource.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
+    val q = queryVector(cbSource).select(col("embedding").as("qe"))
     // ADC lookup table: query-subvector distance to every codebook entry
     // (m·nCodes = 64 rows, broadcast back)
     val qdist = cb.crossJoin(broadcast(q))
@@ -1614,7 +1624,7 @@ object Ann {
                                    k: Int = 10, shortlist: Int = 50): DataFrame = {
     GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
-    val q = emb.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
+    val q = queryVector(emb).select(col("embedding").as("qe"))
     pqTopKOver(spark, emb, emb, shortlist, carryEmbedding = true)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), expr("graft_l2sq(embedding, qe)").as("l2sq"))
@@ -1684,7 +1694,7 @@ object Ann {
     GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
     val nRow = emb.agg(count(lit(1)).as("n_vectors"))
-    val q = emb.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
+    val q = queryVector(emb).select(col("embedding").as("qe"))
     // pin (r19, guide §2.4): the exact top-k is joined by ALL THREE
     // recall cells, and each reference re-planned the corpus scan +
     // L2 TakeOrdered subtree. k rows, materialized once.
@@ -1766,7 +1776,7 @@ object Ann {
       .select(
         expr("transform(sl, e -> e.lo)").as("los"),
         expr("transform(sl, e -> e.hi)").as("his"))
-    val q = emb.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
+    val q = queryVector(emb).select(col("embedding").as("qe"))
     emb.where(col("vec_id") =!= 0)
       .crossJoin(broadcast(statsRow)).crossJoin(broadcast(q))
       .withColumn("codes", expr(
@@ -1828,7 +1838,7 @@ object Ann {
   def sq8Recall(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
-    val q = emb.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
+    val q = queryVector(emb).select(col("embedding").as("qe"))
     val exact = emb.where(col("vec_id") =!= 0).crossJoin(broadcast(q))
       .select(col("vec_id"), expr("graft_l2sq(embedding, qe)").as("d"))
       .orderBy(col("d").asc, col("vec_id")).limit(k)
@@ -3461,7 +3471,7 @@ object Ann {
       s"""aggregate(sequence($lo, ${lo + 31}), cast(0 as bigint), (acc, i) ->
          |  acc + IF(element_at($src, i) >= cast(0.0 as float),
          |           shiftleft(cast(1 as bigint), i - $lo), cast(0 as bigint)))""".stripMargin
-    val q = emb.where(col("vec_id") === 0).limit(1)
+    val q = queryVector(emb)
       .select(expr(signWord("embedding", 1)).as("q_lo"),
         expr(signWord("embedding", 33)).as("q_hi"))
     emb.where(col("vec_id") =!= 0)
@@ -3499,7 +3509,7 @@ object Ann {
   def binaryRecall(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
-    val q = emb.where(col("vec_id") === 0).limit(1).select(col("embedding").as("qe"))
+    val q = queryVector(emb).select(col("embedding").as("qe"))
     val exact = emb.where(col("vec_id") =!= 0).crossJoin(broadcast(q))
       .select(col("vec_id"), expr("graft_l2sq(embedding, qe)").as("d"))
       .orderBy(col("d").asc, col("vec_id")).limit(k)

@@ -96,30 +96,9 @@ object TableSink {
     val untouched = split("left_anti").select(
       col("user_id"), dec(col("last_value"), 18, 2).cast("double").as("last_value"),
       col("updated_at"), col("n_changes"), col("max_seq"), col("is_deleted"))
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    merged.unionByName(untouched).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // Crash-safe swap. Invariant: at EVERY instant at least one of
-    // {dst, bak} holds a complete committed state, and every rename is
-    // checked (Hadoop FileSystem.rename reports failure as `false`; an
-    // unchecked failed dst→bak rename would make rename(tmp,dst) nest the
-    // tmp dir INSIDE the live dir, silently mixing old and new files).
-    val dst = new org.apache.hadoop.fs.Path(path)
-    // path-resolved FS: FileSystem.get(conf) is the DEFAULT filesystem and
-    // throws "Wrong FS" for state on s3a://… when the default is hdfs/local
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bak = new org.apache.hadoop.fs.Path(path + ".bak")
-    def mv(from: org.apache.hadoop.fs.Path, to: org.apache.hadoop.fs.Path): Unit =
-      require(fs.rename(from, to), s"state swap: rename $from -> $to failed")
-    // recovering from a crashed swap (only .bak survives): promote the
-    // backup FIRST — deleting it while dst is absent would leave a window
-    // with no recoverable copy at all
-    if (!fs.exists(dst) && fs.exists(bak)) mv(bak, dst)
-    if (fs.exists(dst)) {
-      fs.delete(bak, true)
-      mv(dst, bak)
-    }
-    mv(tmp, dst)
-    fs.delete(bak, true)
+    val tmp = path + ".tmp"
+    merged.unionByName(untouched).write.mode(SaveMode.Overwrite).parquet(tmp)
+    DirSwap.commit(spark, tmp, path)
     readLive(spark, path)
   }
 
@@ -136,18 +115,13 @@ object TableSink {
     * Seeding decisions MUST use this (not a bare exists(path)): after such
     * a crash the live path is absent but `.bak` holds the real state, and
     * seeding over it would orphan then delete the only copy. */
-  def stateExists(spark: SparkSession, path: String): Boolean = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(live) || fs.exists(new org.apache.hadoop.fs.Path(path + ".bak"))
-  }
+  def stateExists(spark: SparkSession, path: String): Boolean =
+    DirSwap.committed(spark, path).isDefined
 
   /** Read the state table with its declared schema, falling back to the
     * `.bak` left by a swap that crashed between its two renames. */
   private def readState(spark: SparkSession, path: String): DataFrame = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = if (fs.exists(live)) path else path + ".bak"
+    val src = DirSwap.committed(spark, path).getOrElse(path)
     // snapshot-seeded state (writeSnapshot of a plain materialization)
     // predates the watermark/tombstone columns: "nothing applied yet",
     // all rows live
@@ -204,7 +178,7 @@ object TableSink {
       nFiles: Long, totalBytes: Long, targetFiles: Long, worthCompacting: Boolean)
 
   /** Execute a compaction: rewrite the table at `targetFiles` files via
-    * the tmp-swap used by [[upsert]]. Returns the plan it executed.
+    * the [[DirSwap]] that [[upsert]] uses. Returns the plan it executed.
     *
     * CONCURRENCY CONTRACT — the WRITER must be stopped (pipeline paused,
     * see [[graft.Pipeline.pause]]) for the duration of this call: the
@@ -216,27 +190,18 @@ object TableSink {
     * pipeline. Readers: there is an instant between the two renames where
     * the table path does not exist; concurrent readers should retry on
     * FileNotFound (the window is two FS metadata ops). A crash between the
-    * renames leaves the complete pre-compaction table at `<path>.bak` —
-    * restore by renaming it back manually. */
+    * renames leaves the complete pre-compaction table at `<path>.bak`,
+    * which [[readLive]] reads and the next [[upsert]] promotes back. */
   def compactSmallFiles(
       spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024): CompactionPlan = {
     val plan = compactionPlan(spark, path, targetFileBytes)
     if (plan.worthCompacting) {
-      val dst = new org.apache.hadoop.fs.Path(path)
-      val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmpPath = path + ".compact.tmp"
+      val tmp = path + ".compact.tmp"
       spark.read.parquet(path)
         .repartition(plan.targetFiles.toInt)
-        .write.mode(SaveMode.Overwrite).parquet(tmpPath)
-      val tmp = new org.apache.hadoop.fs.Path(tmpPath)
-      val bak = new org.apache.hadoop.fs.Path(path + ".bak")
-      def mv(from: org.apache.hadoop.fs.Path, to: org.apache.hadoop.fs.Path): Unit =
-        require(fs.rename(from, to), s"compaction swap: rename $from -> $to failed")
-      fs.delete(bak, true)
-      mv(dst, bak)
-      mv(tmp, dst)
-      fs.delete(bak, true)
+        .write.mode(SaveMode.Overwrite).parquet(tmp)
+      DirSwap.commit(spark, tmp, path)
       ()
     }
     plan

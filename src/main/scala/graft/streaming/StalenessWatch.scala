@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sinks.DirSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -57,15 +58,17 @@ object StalenessWatch {
     StructField("table_name", StringType),
     StructField("last_ms", LongType)))
 
-  /** The last-seen table; absent before the first batch. A state that
-    * exists but cannot be read fails the batch — read as empty, the
-    * batch would overwrite every other table's last-seen time. */
-  private def readState(spark: SparkSession, cfg: Config): Map[String, Long] = {
-    val p = new org.apache.hadoop.fs.Path(cfg.statePath)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Map.empty
-    else spark.read.schema(stateSchema).parquet(cfg.statePath)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-  }
+  /** The last-seen table; absent before the first batch. It is replaced
+    * through a [[DirSwap]], so a crash mid-swap leaves it at `.bak`, where
+    * it is read from. A state that exists but cannot be read fails the
+    * batch — read as empty, the batch would overwrite every other table's
+    * last-seen time. */
+  private def readState(spark: SparkSession, cfg: Config): Map[String, Long] =
+    DirSwap.committed(spark, cfg.statePath) match {
+      case None => Map.empty
+      case Some(src) => spark.read.schema(stateSchema).parquet(src)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
 
   /** Process one micro-batch: merge last-seen, score every declared
     * table against its frozen cadence, append the batch's alert rows. */
@@ -94,8 +97,10 @@ object StalenessWatch {
       BatchLog.write(
         alerts.toDF("table_name", "last_ms", "silence_ms", "staleness_score", "status"),
         cfg.alertPath, batchId)
+      val tmp = cfg.statePath + ".tmp"
       merged.toSeq.toDF("table_name", "last_ms")
-        .coalesce(1).write.mode("overwrite").parquet(cfg.statePath)
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
+      DirSwap.commit(spark, tmp, cfg.statePath)
     }
   }
 

@@ -86,6 +86,24 @@ class StalenessWatchSpec extends AnyFunSuite {
     assert(files() === before)
   }
 
+  test("a crash mid-swap (last-seen only at .bak) keeps the other tables' times") {
+    val c = cfg()
+    StalenessWatch.watchBatch(spark, c, Seq(("a", 0L), ("b", 10L)).toDF("table_name", "ms"), 0L)
+    // the state a crash between the swap's two renames leaves
+    java.nio.file.Files.move(java.nio.file.Paths.get(c.statePath),
+      java.nio.file.Paths.get(c.statePath + ".bak"))
+    StalenessWatch.watchBatch(spark, c, Seq(("a", 15L)).toDF("table_name", "ms"), 1L)
+    val r = StalenessWatch.alerts(spark, c).where(col("batch_id") === 1L).collect()
+      .map(r => r.getAs[String]("table_name") -> (r.getAs[Long]("last_ms"), r.getAs[String]("status")))
+      .toMap
+    // b's last-seen 10 survives; read as empty it would be missing
+    assert(r === Map("a" -> (15L, "ok"), "b" -> (10L, "ok"), "c" -> (-1L, "missing")))
+    val state = spark.read.parquet(c.statePath)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(state === Map("a" -> 15L, "b" -> 10L))
+    assert(!new java.io.File(c.statePath + ".bak").exists())
+  }
+
   test("handshake: the frozen map derives from the batch staleness audit's output") {
     val cadence = StalenessWatch.cadenceOf(Monitoring.tableStaleness(spark, dir))
     assert(cadence.nonEmpty)

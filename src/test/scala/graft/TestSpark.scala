@@ -7,14 +7,7 @@ import org.apache.spark.sql.functions._
 object TestSpark {
   val dir = "/root/testdata/sf0.001"
   lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val s = Tables.scanConfs.foldLeft(b) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    val s = Tables.localSession("graft-test")
     s.sparkContext.setLogLevel("WARN")
     s
   }
