@@ -1,9 +1,9 @@
 package graft
 
-import graft.cdc.Materialize
+import graft.cdc.{Cdc, Materialize}
 import graft.sinks.TableSink
 import graft.sources.WireSource
-import graft.streaming.BatchLog
+import graft.streaming.{BatchLog, MicroBatches}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -30,15 +30,6 @@ object Pipeline {
       // (debezium_config.py table_include_list). Empty = discover once from
       // the wire at start (convenience for backfills/tests).
       fanoutTables: Seq[String] = Nil)
-
-  /** Convert parsed envelopes into the canonical changelog shape. */
-  private def toChangelog(envelopes: DataFrame): DataFrame =
-    envelopes.select(
-      col("op"),
-      coalesce(col("after.user_id"), col("before.user_id")).as("pk"),
-      timestamp_millis(col("ts_ms")).as("ts"),
-      col("offset").as("seq"),
-      coalesce(col("after.value"), col("before.value")).as("value"))
 
   /** Per-message parse guard (the reference consumer's try/except): an
     * unroutable (null-op) envelope goes to the DLQ, never into the apply —
@@ -72,16 +63,12 @@ object Pipeline {
     if (!TableSink.stateExists(spark, cfg.statePath))
       TableSink.writeSnapshot(seed, "user_id", cfg.statePath)
 
-    WireSource.readStream(spark, cfg.wirePath)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatches.start(WireSource.readStream(spark, cfg.wirePath), cfg.checkpointPath) {
+      (batch, batchId) =>
         routeToDlq(cfg, batch, batchId)
-        TableSink.upsert(spark, cfg.statePath,
-          toChangelog(batch.where(col("op").isNotNull)))
+        TableSink.upsert(spark, cfg.statePath, Cdc.envelopeChangelog(batch))
         ()
-      }
-      .start()
+    }
   }
 
   /** Multi-table pipeline (table.include.list): one wire stream fans out
@@ -99,10 +86,8 @@ object Pipeline {
       if (cfg.fanoutTables.nonEmpty) cfg.fanoutTables
       else WireSource.readBatch(spark, cfg.wirePath)
         .select("table_name").distinct().collect().map(_.getString(0)).toSeq
-    WireSource.readStream(spark, cfg.wirePath)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatches.start(WireSource.readStream(spark, cfg.wirePath), cfg.checkpointPath) {
+      (batch, batchId) =>
         // one materialization of the micro-batch, |tables| cheap slices
         batch.persist()
         try {
@@ -120,29 +105,16 @@ object Pipeline {
             if (staticTables.nonEmpty) staticTables
             else good.select("table_name").distinct().collect().map(_.getString(0)).toSeq
           tables.foreach { t =>
-            val slice = toChangelog(good.where(col("table_name") === t))
-            val path = s"${cfg.statePath}/$t"
+            val slice = Cdc.envelopeChangelog(good.where(col("table_name") === t))
             // limit-1 probe on the persisted batch, not a shuffle: idle
-            // tables must not pay a state rewrite every micro-batch
-            if (!slice.isEmpty) {
-              if (!TableSink.stateExists(spark, path))
-                // weighted seed: carries the per-key applied watermark
-                // (max_seq), so a checkpoint replay of the seeding batch
-                // is dropped by upsert instead of double-counted; the
-                // tombstone-keeping form so a key deleted at the end of
-                // the seed batch keeps its watermark and count too
-                TableSink.writeSnapshot(
-                  Materialize.latestStateWeighted(slice.withColumn("weight", lit(1L))),
-                  "user_id", path)
-              else
-                TableSink.upsert(spark, path, slice)
-            }
+            // tables must not pay a state rewrite every micro-batch. A
+            // table's first slice upserts onto its absent (empty) state.
+            if (!slice.isEmpty) TableSink.upsert(spark, s"${cfg.statePath}/$t", slice)
             ()
           }
         } finally { batch.unpersist(); () }
         ()
-      }
-      .start()
+    }
   }
 
   /** Run the single-table pipeline under the auto-recovery policy
@@ -213,7 +185,7 @@ object Pipeline {
 
   /** Batch (non-continuous) form of the same pipeline, for backfills. */
   def runBatch(spark: SparkSession, wirePath: String, statePath: String): DataFrame = {
-    val changes = toChangelog(WireSource.readBatch(spark, wirePath))
+    val changes = Cdc.envelopeChangelog(WireSource.readBatch(spark, wirePath))
     TableSink.writeSnapshot(Materialize.latestSnapshot(changes), "user_id", statePath)
     spark.read.parquet(statePath)
   }

@@ -189,7 +189,10 @@ object Tables {
     * would otherwise each re-derive an expensive subtree — per-row-heavy
     * scoring feeding both a count branch and a rank branch, or unrolled
     * iteration rounds — correctness must not hinge on the optional
-    * exchange-reuse rewrite finding the duplication. Consumers must
+    * exchange-reuse rewrite finding the duplication. An unrolled loop
+    * that reads each round's output twice grows its unpinned plan
+    * exponentially in the round count; pinned, each round computes once
+    * and the driver optimizes a bounded plan. Consumers must
     * aggregate order-independently (a checkpoint re-read has no row-order
     * guarantee). On a cluster, executor-local blocks are the standard
     * iterative-refinement pattern (MLlib ALS); swap `checkpoint()` against

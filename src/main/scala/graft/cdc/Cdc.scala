@@ -112,6 +112,19 @@ object Cdc {
         col("envelope.*"))
   }
 
+  /** Parsed envelopes ([[parseEnvelope]]) as the canonical changelog
+    * columns (op, pk, ts, seq, value): the row image's key and value
+    * (`after`, or `before` for a delete), the event time at ms precision
+    * and the wire offset as seq. An envelope with no op is unroutable (a
+    * poisoned message, see `Pipeline`'s DLQ) and is dropped. */
+  private[graft] def envelopeChangelog(envelopes: DataFrame): DataFrame =
+    envelopes.where(col("op").isNotNull).select(
+      col("op"),
+      coalesce(col("after.user_id"), col("before.user_id")).as("pk"),
+      timestamp_millis(col("ts_ms")).as("ts"),
+      col("offset").as("seq"),
+      coalesce(col("after.value"), col("before.value")).as("value"))
+
   /** Dead-letter routing: wire messages whose envelope fails to parse go
     * to the DLQ instead of poisoning the apply (the reference's consumer
     * loop catches per-message parse errors and keeps consuming —

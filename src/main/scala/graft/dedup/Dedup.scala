@@ -1162,8 +1162,7 @@ object Dedup {
     * silently under-merged labeling when maxRounds < component diameter. */
   private[graft] def propagateLabels(
       ids: DataFrame, edges: DataFrame, maxRounds: Int = 25): DataFrame = {
-    var labels = ids.select(col("doc_id"), col("doc_id").as("label"))
-      .localCheckpoint(eager = true)
+    var labels = Tables.pin(ids.select(col("doc_id"), col("doc_id").as("label")))
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
@@ -1171,11 +1170,10 @@ object Dedup {
         .join(labels.withColumnRenamed("doc_id", "id_b"), "id_b")
         .groupBy(col("id_a").as("doc_id"))
         .agg(min(col("label")).as("nbr_label"))
-      val joined = labels
+      val joined = Tables.pin(labels
         .join(nbrMin, Seq("doc_id"), "left")
         .select(col("doc_id"), col("label"),
-          coalesce(col("nbr_label"), col("label")).as("cand"))
-        .localCheckpoint(eager = true)
+          coalesce(col("nbr_label"), col("label")).as("cand")))
       converged = joined.where(col("cand") < col("label")).isEmpty
       labels = joined.select(col("doc_id"),
         least(col("label"), col("cand")).as("label"))
@@ -2104,11 +2102,10 @@ object Dedup {
   private[graft] def clusterEdgesLargeStar(pairs: DataFrame, maxRounds: Int): DataFrame = {
     // parent pointers as an edge relation (u, p); start from the raw
     // symmetric edges. Convergence: every node points at its component min.
-    var edges = pairs
+    var edges = Tables.pin(pairs
       .unionAll(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .select(col("id_a").as("u"), col("id_b").as("v"))
-      .distinct()
-      .localCheckpoint(eager = true)
+      .distinct())
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
@@ -2137,8 +2134,8 @@ object Dedup {
       val small = smallEdges.join(minSmall, "u")
         .where(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
-      val next = large.unionAll(small).where(col("u") =!= col("v")).distinct()
-        .localCheckpoint(eager = true) // truncate the exponential lineage
+      // pinned: truncates the exponential lineage
+      val next = Tables.pin(large.unionAll(small).where(col("u") =!= col("v")).distinct())
       // fixed point = the edge SET stopped changing. ONE action per round
       // (r19): both sides are distinct sets, so they are equal iff every
       // (u, v) of their unionAll appears exactly twice (a row only in one

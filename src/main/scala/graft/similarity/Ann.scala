@@ -27,23 +27,6 @@ object Ann {
   /** 2^40 quantization scale for cross-row float sums. */
   private val Q = 1099511627776.0
 
-  /** Materialize an iteration-trajectory intermediate ONCE and truncate
-    * its lineage (eager `localCheckpoint`, executor-local blocks).
-    * Unrolled fixed-round loops (kmeans_converge, nndescent_converge)
-    * reference each round's output at least twice — without truncation
-    * the static plan re-derives every prior round per reference and its
-    * size grows exponentially in the round count (r9 evidence: 632
-    * parquet scans / 866 exchanges / 2,559 nodes in one plan). With it,
-    * each round computes once and the driver optimizes a bounded plan.
-    * On a real cluster the same call holds — executor-local checkpoint
-    * blocks are the standard iterative-algorithm pattern (MLlib's ALS /
-    * GraphX use periodic checkpointing for exactly this); a
-    * reliability-critical deployment would swap in `checkpoint()` against
-    * the cluster checkpoint dir with identical semantics. Every consumer
-    * aggregates order-independently (2⁴⁰-quantized sums), so the
-    * partition order a checkpoint re-read yields cannot change a bit. */
-  private def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
   /** The query vector's row (vec_id = 0) of `emb`. vec_id is the table's
     * key, so this is the oracle's `WHERE vec_id = 0` row. The top-1 keeps
     * the side provably one row for the broadcast joins that take it, and
@@ -661,7 +644,7 @@ object Ann {
 
   def kmeansConvergeOf(spark: SparkSession, embSrc: DataFrame, rounds: Int = 3): DataFrame = {
     val emb = embSrc.select(col("vec_id"), col("label"), col("embedding"))
-    val long = pin(emb
+    val long = Tables.pin(emb
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .select(col("vec_id"), col("pos"), col("x").cast("double").as("x")))
     def qMean(c: Column): Column =
@@ -681,15 +664,15 @@ object Ann {
     // twice (stats for round r, inputs of round r+1). Without truncation
     // the unrolled plan re-derives each prior round per reference — the
     // static plan grows exponentially in the round count (r9: 632 scans /
-    // 866 exchanges for 3 rounds). [[pin]] materializes each round once
+    // 866 exchanges for 3 rounds). Tables.pin materializes each round once
     // and truncates lineage; all downstream sums are 2⁴⁰-quantized exact,
     // so the partition order a checkpoint re-read yields cannot move a bit.
     var assign = emb.select(col("vec_id"), col("label"))
-    var cents = pin(centroidsOf(assign))
+    var cents = Tables.pin(centroidsOf(assign))
     val stats = Seq.newBuilder[DataFrame]
     for (r <- 1 to rounds) {
-      val newAssign = pin(assignTo(cents))
-      val newCents = pin(centroidsOf(newAssign))
+      val newAssign = Tables.pin(assignTo(cents))
+      val newCents = Tables.pin(centroidsOf(newAssign))
       val moved = assign.select(col("vec_id"), col("label").as("old_label"))
         .join(newAssign.select(col("vec_id"), col("label").as("new_label")), "vec_id")
         .agg(sum(when(col("old_label") =!= col("new_label"), 1L).otherwise(0L)).as("n_moved"))
@@ -1698,7 +1681,7 @@ object Ann {
     // pin (r19, guide §2.4): the exact top-k is joined by ALL THREE
     // recall cells, and each reference re-planned the corpus scan +
     // L2 TakeOrdered subtree. k rows, materialized once.
-    val exact = pin(emb.where(col("vec_id") =!= 0).crossJoin(broadcast(q))
+    val exact = Tables.pin(emb.where(col("vec_id") =!= 0).crossJoin(broadcast(q))
       .select(col("vec_id"), expr("graft_l2sq(embedding, qe)").as("d"))
       .orderBy(col("d").asc, col("vec_id")).limit(k).select("vec_id"))
     def recallOf(topk: DataFrame, name: String) =
@@ -2220,7 +2203,7 @@ object Ann {
   def nnDescentRound(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     // the vector table is joined against every edge/candidate set below
     // (score + rescore legs) — pin it once instead of re-scanning per join
-    val emb = pin(Tables.load(spark, dir, "embeddings").select(col("vec_id"), col("embedding")))
+    val emb = Tables.pin(Tables.load(spark, dir, "embeddings").select(col("vec_id"), col("embedding")))
     val coded = emb.withColumn("bucket", signCode(col("embedding")))
     // seed edges, two kinds — both are essential: sign-LSH bucket peers
     // give LOCALLY good neighbors, and deterministic "ring" partners
@@ -2249,7 +2232,7 @@ object Ann {
     // nnDescentConverge already pins per round. Interleaved A/B at
     // sf0.1: 1.20 → 0.93 s median. Consumers aggregate/window on
     // explicit keys, so checkpoint row order cannot change a bit.
-    val g0 = pin(p0.withColumn("rn", row_number().over(w)).where(col("rn") <= k).drop("rn"))
+    val g0 = Tables.pin(p0.withColumn("rn", row_number().over(w)).where(col("rn") <= k).drop("rn"))
     val nn2 = g0.select(col("vec_id"), col("nbr").as("mid"))
       .join(g0.select(col("vec_id").as("mid"), col("nbr").as("cand")), "mid")
       .where(col("cand") =!= col("vec_id"))
@@ -2332,7 +2315,7 @@ object Ann {
     // round's top-k graph (referenced by the next round's expansion AND
     // two rounds of stats) — see the lineage note in [[kmeansConverge]];
     // without this the 3-round static plan held 632 parquet scans
-    val emb = pin(Tables.load(spark, dir, "embeddings").select(col("vec_id"), col("embedding")))
+    val emb = Tables.pin(Tables.load(spark, dir, "embeddings").select(col("vec_id"), col("embedding")))
     val coded = emb.withColumn("bucket", signCode(col("embedding")))
     val nv = emb.agg(count(lit(1)).as("nv"))
     val bucketEdges = seedEdges(coded)
@@ -2358,9 +2341,9 @@ object Ann {
             .where(col("cand") =!= col("vec_id"))
             .select(col("vec_id"), col("cand").as("nbr")))
         .distinct()
-    val g0 = pin(topK(score(bucketEdges.union(ringEdges).distinct())))
-    val g1 = pin(topK(score(expand(g0))))
-    val g2 = pin(topK(score(expand(g1))))
+    val g0 = Tables.pin(topK(score(bucketEdges.union(ringEdges).distinct())))
+    val g1 = Tables.pin(topK(score(expand(g0))))
+    val g2 = Tables.pin(topK(score(expand(g1))))
     def best(g: DataFrame): DataFrame =
       g.groupBy("vec_id").agg(max(col("cos")).as("best"))
     def roundStats(round: Int, g: DataFrame, prev: Option[DataFrame]): DataFrame = {
@@ -3155,7 +3138,10 @@ object Ann {
     // at scale this halves the raw-side passes and the stage count.
     // All cross-row sums are exact integers over 2^20-quantized coords.
     GraftFunctions.register(spark)
-    val sharedPerDim = emb
+    // d rows, consumed by TWO branches (the μ/σ broadcast and the raw
+    // identity) — pinned so the n·d explode pass runs once, the
+    // per-round-state precedent of the kmeans loops
+    val sharedPerDim = Tables.pin(emb
       // graft_norm2: the codegen'd Σx² (same index-ordered accumulation
       // as the portable fold — bit-identical); the interpreted HOF fold
       // measures ~1.5 ms/row at d=64 and dominated this operator
@@ -3172,11 +3158,7 @@ object Ann {
         sum((col("xq") * col("xq")).cast(d38)).cast(d38).as("s2"),
         count(col("uq")).as("cnt_nz"),
         sum(col("uq").cast(d19)).cast(d19).as("su"),
-        sum((col("uq") * col("uq")).cast(d38)).cast(d38).as("sq2"))
-      // d rows, consumed by TWO branches (the μ/σ broadcast and the raw
-      // identity) — checkpoint so the n·d explode pass runs once, the
-      // per-round-state precedent of the kmeans loops
-      .localCheckpoint(true)
+        sum((col("uq") * col("uq")).cast(d38)).cast(d38).as("sq2")))
     val stats = sharedPerDim
       .select(col("pos"),
         (col("s1").cast("double") / col("n") / q20).as("mu"),

@@ -2,7 +2,7 @@ package graft.sinks
 
 import graft.cdc.Materialize
 import graft.dec
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -119,16 +119,20 @@ object TableSink {
     DirSwap.committed(spark, path).isDefined
 
   /** Read the state table with its declared schema, falling back to the
-    * `.bak` left by a swap that crashed between its two renames. */
-  private def readState(spark: SparkSession, path: String): DataFrame = {
-    val src = DirSwap.committed(spark, path).getOrElse(path)
-    // snapshot-seeded state (writeSnapshot of a plain materialization)
-    // predates the watermark/tombstone columns: "nothing applied yet",
-    // all rows live
-    spark.read.schema(stateSchema).parquet(src)
-      .withColumn("max_seq", coalesce(col("max_seq"), lit(Long.MinValue)))
-      .withColumn("is_deleted", coalesce(col("is_deleted"), lit(false)))
-  }
+    * `.bak` left by a swap that crashed between its two renames. An absent
+    * state reads as empty, so the first [[upsert]] creates it. */
+  private def readState(spark: SparkSession, path: String): DataFrame =
+    DirSwap.committed(spark, path) match {
+      case None =>
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], stateSchema)
+      case Some(src) =>
+        // snapshot-seeded state (writeSnapshot of a plain materialization)
+        // predates the watermark/tombstone columns: "nothing applied yet",
+        // all rows live
+        spark.read.schema(stateSchema).parquet(src)
+          .withColumn("max_seq", coalesce(col("max_seq"), lit(Long.MinValue)))
+          .withColumn("is_deleted", coalesce(col("is_deleted"), lit(false)))
+    }
 
   /** Time-partitioned lake write (the reference's S3 sink with time-based
     * partitioning): rows land under dt=YYYY-MM-DD directories so readers

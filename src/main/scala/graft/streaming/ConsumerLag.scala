@@ -54,13 +54,8 @@ object ConsumerLag {
   /** Start the monitor over the wire (file source, Kafka-swappable like
     * [[graft.sources.WireSource]]). */
   def start(spark: SparkSession, cfg: Config): StreamingQuery =
-    graft.sources.WireSource.readStream(spark, cfg.wirePath)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        monitorBatch(spark, cfg, batch, batchId)
-      }
-      .start()
+    MicroBatches.start(graft.sources.WireSource.readStream(spark, cfg.wirePath),
+      cfg.checkpointPath)(monitorBatch(spark, cfg, _, _))
 
   /** One micro-batch: persist this batch's per-partition deltas, then
     * write the (group, topic, partition) lag rows — committed = the

@@ -57,14 +57,10 @@ object CorpusAdmission {
     * feed (swap the file source for `format("kafka")` exactly like
     * [[graft.sources.WireSource]]). */
   def start(spark: SparkSession, cfg: Config): StreamingQuery =
-    spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1").json(cfg.docsPath)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(spark, cfg, batch, batchId)
-      }
-      .start()
+    MicroBatches.start(
+      spark.readStream.schema(docSchema)
+        .option("maxFilesPerTrigger", "1").json(cfg.docsPath),
+      cfg.checkpointPath)(admitBatch(spark, cfg, _, _))
 
   /** One micro-batch: decide every incoming doc, persist decisions and
     * the admitted docs' signature state. Exposed for direct batch use

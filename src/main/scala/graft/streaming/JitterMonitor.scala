@@ -73,13 +73,8 @@ object JitterMonitor {
   }
 
   def start(spark: SparkSession, cfg: Config): StreamingQuery =
-    graft.sources.WireSource.readStream(spark, cfg.wirePath)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        monitorBatch(spark, cfg, batch, batchId)
-      }
-      .start()
+    MicroBatches.start(graft.sources.WireSource.readStream(spark, cfg.wirePath),
+      cfg.checkpointPath)(monitorBatch(spark, cfg, _, _))
 
   /** One micro-batch: persist this batch's per-topic deltas, then fold
     * every delta with batch_id ≤ this one — intra sums plus the

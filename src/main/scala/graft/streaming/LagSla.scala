@@ -62,14 +62,10 @@ object LagSla {
   /** Start the monitor over the wire (file source, Kafka-swappable like
     * [[graft.sources.WireSource]]): parsed envelopes → event timestamps. */
   def start(spark: SparkSession, cfg: Config): StreamingQuery =
-    graft.sources.WireSource.readStream(spark, cfg.wirePath)
-      .select(timestamp_millis(col("ts_ms")).as("ts"))
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        monitorBatch(spark, cfg, batch, batchId)
-      }
-      .start()
+    MicroBatches.start(
+      graft.sources.WireSource.readStream(spark, cfg.wirePath)
+        .select(timestamp_millis(col("ts_ms")).as("ts")),
+      cfg.checkpointPath)(monitorBatch(spark, cfg, _, _))
 
   /** One micro-batch: persist this batch's per-minute deltas, rebuild the
     * cumulative ladder from state batches ≤ this one, write the 4 ladder

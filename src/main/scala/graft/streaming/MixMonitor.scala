@@ -93,14 +93,10 @@ object MixMonitor {
     * source for `format("kafka")` exactly like
     * [[graft.sources.WireSource]]). */
   def start(spark: SparkSession, cfg: Config): StreamingQuery =
-    spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1").json(cfg.docsPath)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        monitorBatch(spark, cfg, batch, batchId)
-      }
-      .start()
+    MicroBatches.start(
+      spark.readStream.schema(docSchema)
+        .option("maxFilesPerTrigger", "1").json(cfg.docsPath),
+      cfg.checkpointPath)(monitorBatch(spark, cfg, _, _))
 
   /** One micro-batch: persist this batch's per-source token deltas,
     * rebuild the cumulative mix from state batches ≤ this one, append

@@ -84,14 +84,10 @@ object OutlierMonitor {
     * source for `format("kafka")` exactly like
     * [[graft.sources.WireSource]]). */
   def start(spark: SparkSession, cfg: Config): StreamingQuery =
-    spark.readStream.schema(vecSchema)
-      .option("maxFilesPerTrigger", "1").json(cfg.vecsPath)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        monitorBatch(spark, cfg, batch, batchId)
-      }
-      .start()
+    MicroBatches.start(
+      spark.readStream.schema(vecSchema)
+        .option("maxFilesPerTrigger", "1").json(cfg.vecsPath),
+      cfg.checkpointPath)(monitorBatch(spark, cfg, _, _))
 
   /** Read back the per-(batch, label) outlier log. */
   def outliers(spark: SparkSession, cfg: Config): DataFrame =

@@ -63,10 +63,8 @@ object PayloadWatch {
       wirePath: String,
       alertPath: String,
       checkpointPath: String): StreamingQuery =
-    WireSource.readRawStream(spark, wirePath)
-      .writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatches.start(WireSource.readRawStream(spark, wirePath), checkpointPath) {
+      (batch, batchId) =>
         // bounded collect: ≤ |topics|·|declared fields| rows per batch
         val rows = missingInBatch(batch).collect()
         if (rows.nonEmpty) {
@@ -80,6 +78,5 @@ object PayloadWatch {
             alertPath, batchId)
         }
         ()
-      }
-      .start()
+    }
 }

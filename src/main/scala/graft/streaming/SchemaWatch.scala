@@ -55,10 +55,8 @@ object SchemaWatch {
       checkpointPath: String,
       table: String = "events",
       dialect: SchemaDdl.Dialect = SchemaDdl.Postgres): StreamingQuery =
-    WireSource.readRawStream(spark, wirePath)
-      .writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatches.start(WireSource.readRawStream(spark, wirePath), checkpointPath) {
+      (batch, batchId) =>
         // bounded collect: rows = distinct UNKNOWN fields in this batch
         // (a handful at worst — this is drift, not data)
         val rows = driftInBatch(batch).collect()
@@ -80,6 +78,5 @@ object SchemaWatch {
             alertPath, batchId)
         }
         ()
-      }
-      .start()
+    }
 }

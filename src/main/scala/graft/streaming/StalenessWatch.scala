@@ -110,12 +110,10 @@ object StalenessWatch {
 
   /** Start the watch over a (table_name, ms) event stream. */
   def start(spark: SparkSession, eventsPath: String, cfg: Config): StreamingQuery =
-    spark.readStream.schema(eventSchema)
-      .option("maxFilesPerTrigger", "4").json(eventsPath)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatches.start(
+      spark.readStream.schema(eventSchema)
+        .option("maxFilesPerTrigger", "4").json(eventsPath),
+      cfg.checkpointPath) { (batch, batchId) =>
         watchBatch(batch.sparkSession, cfg, batch, batchId)
       }
-      .start()
 }

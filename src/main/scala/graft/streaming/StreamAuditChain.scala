@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.cdc.Cdc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -41,13 +42,9 @@ object StreamAuditChain {
     StructField("chain_hash", StringType)))
 
   def start(spark: SparkSession, cfg: Config): StreamingQuery =
-    graft.sources.WireSource.readStream(spark, cfg.wirePath)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        monitorBatch(spark, cfg, batch, batchId)
-      }
-      .start()
+    MicroBatches.start(
+      Cdc.envelopeChangelog(graft.sources.WireSource.readStream(spark, cfg.wirePath)),
+      cfg.checkpointPath)(monitorBatch(spark, cfg, _, _))
 
   /** One micro-batch of changelog rows (pk, ts, seq, op, value): fold the
     * batch's links per key on top of the N−1 snapshot's chain head, write

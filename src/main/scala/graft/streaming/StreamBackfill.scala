@@ -87,13 +87,10 @@ object StreamBackfill {
   }
 
   def start(spark: SparkSession, cfg: Config): StreamingQuery =
-    graft.sources.WireSource.readRawStream(spark, cfg.wirePath)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        monitorBatch(spark, cfg, batch.select(col("topic"), col("offset")), batchId)
-      }
-      .start()
+    MicroBatches.start(
+      graft.sources.WireSource.readRawStream(spark, cfg.wirePath)
+        .select(col("topic"), col("offset")),
+      cfg.checkpointPath)(monitorBatch(spark, cfg, _, _))
 
   /** One micro-batch: persist this batch's islands, fold every island
     * with batch_id ≤ this one into the merged observed ranges, emit both

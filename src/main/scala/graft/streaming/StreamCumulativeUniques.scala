@@ -55,14 +55,12 @@ object StreamCumulativeUniques {
     StructField("sk", BinaryType)))
 
   def start(spark: SparkSession, eventsPath: String, cfg: Config): StreamingQuery =
-    spark.readStream.schema(eventSchema)
-      .option("maxFilesPerTrigger", "4").json(eventsPath)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatches.start(
+      spark.readStream.schema(eventSchema)
+        .option("maxFilesPerTrigger", "4").json(eventsPath),
+      cfg.checkpointPath) { (batch, batchId) =>
         monitorBatch(batch.sparkSession, cfg, batch, batchId)
       }
-      .start()
 
   /** One micro-batch of events (ts, user_id): reduce to per-day sketches,
     * union into the N−1 snapshot, write the N snapshot. Exposed for

@@ -55,14 +55,10 @@ object StreamLsnTrend {
       .agg(max(col("lsn")).as("bucket_max"), count(lit(1)).as("n_arrived"))
 
   def start(spark: SparkSession, cfg: Config): StreamingQuery =
-    graft.sources.WireSource.readStream(spark, cfg.wirePath)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        monitorBatch(spark, cfg,
-          batch.select(col("ts_ms"), col("offset").as("lsn")), batchId)
-      }
-      .start()
+    MicroBatches.start(
+      graft.sources.WireSource.readStream(spark, cfg.wirePath)
+        .select(col("ts_ms"), col("offset").as("lsn")),
+      cfg.checkpointPath)(monitorBatch(spark, cfg, _, _))
 
   /** One micro-batch: persist this batch's per-bucket deltas, then fold
     * every delta with batch_id ≤ this one into the cumulative trend.

@@ -50,16 +50,11 @@ object StreamSaltAdvisor {
     batch.groupBy("pk").agg(count(lit(1)).as("n_events"))
 
   def start(spark: SparkSession, cfg: Config): StreamingQuery =
-    graft.sources.WireSource.readStream(spark, cfg.wirePath)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // pk off the parsed envelope: a delete carries only `before`
-        monitorBatch(spark, cfg,
-          batch.select(coalesce(col("after.user_id"), col("before.user_id")).as("pk")),
-          batchId)
-      }
-      .start()
+    MicroBatches.start(
+      // pk off the parsed envelope: a delete carries only `before`
+      graft.sources.WireSource.readStream(spark, cfg.wirePath)
+        .select(coalesce(col("after.user_id"), col("before.user_id")).as("pk")),
+      cfg.checkpointPath)(monitorBatch(spark, cfg, _, _))
 
   /** One micro-batch: persist this batch's per-key deltas, fold every
     * delta with batch_id ≤ this one into the per-key count table, and

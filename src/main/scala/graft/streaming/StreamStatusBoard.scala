@@ -67,14 +67,12 @@ object StreamStatusBoard {
     StructField("user_id", LongType)))
 
   def start(spark: SparkSession, eventsPath: String, cfg: Config): StreamingQuery =
-    spark.readStream.schema(eventSchema)
-      .option("maxFilesPerTrigger", "4").json(eventsPath)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatches.start(
+      spark.readStream.schema(eventSchema)
+        .option("maxFilesPerTrigger", "4").json(eventsPath),
+      cfg.checkpointPath) { (batch, batchId) =>
         monitorBatch(batch.sparkSession, cfg, batch, batchId)
       }
-      .start()
 
   /** One micro-batch of events (ts, user_id, event_type): fold the batch
     * into the N−1 snapshots, write the N snapshots. Exposed for direct

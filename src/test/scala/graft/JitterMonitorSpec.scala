@@ -72,6 +72,18 @@ class JitterMonitorSpec extends AnyFunSuite {
     }
   }
 
+  test("start over the wire reports what batch 0 over the same envelopes does") {
+    val base = tmp()
+    val c = Config(s"$base/wire", s"$base/state", s"$base/ckpt")
+    graft.sources.WireSource.publish(spark, dir, c.wirePath)
+    TestSpark.drain(JitterMonitor.start(spark, c))
+    val direct = c.copy(statePath = s"$base/direct")
+    JitterMonitor.monitorBatch(spark, direct,
+      graft.sources.WireSource.readBatch(spark, c.wirePath), 0L)
+    def rows(cfg: Config) = JitterMonitor.jitter(spark, cfg).collect().map(_.toString).toSeq
+    assert(rows(direct).nonEmpty && rows(c) == rows(direct))
+  }
+
   test("an at-least-once replay overwrites its own partition and never double-counts") {
     val c = cfg()
     val b0 = Seq(("t.a", 0L, 1L), ("t.a", 7L, 2L)).toDF("topic", "ts_ms", "offset")

@@ -65,6 +65,21 @@ class OutlierMonitorSpec extends AnyFunSuite {
     assert(clean === 0L)
   }
 
+  test("start over a vector feed logs what batch 0 over the same rows does") {
+    val base = tmp()
+    val c = Config(s"$base/vecs", s"$base/state", s"$base/ckpt", stats)
+    TestSpark.writeJsonFile(Seq((1L, 0, Seq(0.1, 0.0)), (2L, 0, Seq(9.9, 10.1)),
+      (3L, 1, Seq(10.0, 10.1)), (4L, 7, Seq(0.0, 0.0)))
+      .toDF("vec_id", "label", "embedding"), c.vecsPath)
+    TestSpark.drain(OutlierMonitor.start(spark, c))
+    val direct = c.copy(statePath = s"$base/direct")
+    OutlierMonitor.monitorBatch(spark, direct,
+      spark.read.schema(OutlierMonitor.vecSchema).json(c.vecsPath), 0L)
+    def rows(cfg: Config) =
+      OutlierMonitor.outliers(spark, cfg).orderBy("label").collect().map(_.toString).toSeq
+    assert(rows(direct).length == 3 && rows(c) == rows(direct))
+  }
+
   test("statsOf derives frozen stats that accept the reference population") {
     val ref = Seq(
       (1L, 0, Seq(0.0f, 0.0f)), (2L, 0, Seq(0.2f, 0.0f)), (3L, 0, Seq(0.0f, 0.2f)),

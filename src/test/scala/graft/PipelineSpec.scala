@@ -96,6 +96,33 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("fanout: replaying the batch that created each table's state moves no value and no count") {
+    val base = Files.createTempDirectory("fanoutreplay").toString
+    WireSource.publish(spark, dir, s"$base/wire")
+    val cfg = Pipeline.Config(
+      wirePath = s"$base/wire", statePath = s"$base/state", checkpointPath = s"$base/ckpt")
+    def states(): Map[String, Map[Long, (Double, Long)]] =
+      new java.io.File(s"$base/state").listFiles().filter(_.isDirectory).map { t =>
+        t.getName -> TableSink.readLive(spark, t.getPath)
+          .select("user_id", "last_value", "n_changes").collect()
+          .map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
+      }.toMap
+    TestSpark.drain(Pipeline.startFanout(spark, cfg))
+    // the fixture's wire is one micro-batch, so batch 0 created every state
+    val commits = new java.io.File(s"$base/ckpt/commits")
+    assert(commits.list().filterNot(_.startsWith(".")).toSeq === Seq("0"))
+    val seeded = states()
+    // a crash after the apply but before the commit: restart replays batch 0
+    commits.listFiles().foreach(_.delete())
+    TestSpark.drain(Pipeline.startFanout(spark, cfg))
+    assert(states() === seeded)
+    val expected = Materialize.fanoutApply(Cdc.parseEnvelope(Cdc.toWire(spark, dir)))
+      .collect().groupBy(_.getString(0)).map { case (t, rows) =>
+        t -> rows.map(r => r.getLong(1) -> ((r.getDouble(2), r.getLong(4)))).toMap
+      }
+    expected.foreach { case (t, rows) => assert(seeded(t) === rows, s"table $t") }
+  }
+
   test("pause/resume: events accumulate during the pause, zero loss, zero duplicate applies") {
     import org.apache.spark.sql.functions.col
     val base = Files.createTempDirectory("pauseresume").toString

@@ -272,6 +272,19 @@ class Round8Spec extends AnyFunSuite {
     assert(after === before)
   }
 
+  test("streaming consumer lag: start over the wire reports what batch 0 over the same rows does") {
+    import graft.streaming.ConsumerLag
+    val base = java.nio.file.Files.createTempDirectory("conslag-start").toString
+    val c = ConsumerLag.Config(s"$base/wire", s"$base/state", s"$base/ckpt")
+    graft.sources.WireSource.publish(spark, dir, c.wirePath)
+    TestSpark.drain(ConsumerLag.start(spark, c))
+    val direct = c.copy(statePath = s"$base/direct")
+    ConsumerLag.monitorBatch(spark, direct,
+      graft.sources.WireSource.readBatch(spark, c.wirePath), 0L)
+    def rows(cfg: ConsumerLag.Config) = ConsumerLag.lag(spark, cfg).collect().map(_.toString).toSeq
+    assert(rows(direct).nonEmpty && rows(c) === rows(direct))
+  }
+
   test("audio decode: the WAV container round trip reproduces the closed-form waveform") {
     val rows = graft.multimodal.Binary.audioDecode(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap

@@ -104,6 +104,24 @@ class StalenessWatchSpec extends AnyFunSuite {
     assert(!new java.io.File(c.statePath + ".bak").exists())
   }
 
+  test("start over an event feed alerts and keeps state as batch 0 over the same rows does") {
+    val c = cfg()
+    val eventsPath = tmp()
+    TestSpark.writeJsonFile(Seq(("a", 0L), ("a", 50L), ("a", 100L), ("b", 95L))
+      .toDF("table_name", "ms"), s"$eventsPath/events")
+    TestSpark.drain(StalenessWatch.start(spark, s"$eventsPath/events", c))
+    val base = tmp()
+    val direct = c.copy(statePath = s"$base/state", alertPath = s"$base/alerts")
+    StalenessWatch.watchBatch(spark, direct,
+      spark.read.schema(StalenessWatch.eventSchema).json(s"$eventsPath/events"), 0L)
+    def alerts(cfg: Config) = StalenessWatch.alerts(spark, cfg)
+      .orderBy("table_name").collect().map(_.toString).toSeq
+    def state(cfg: Config) = spark.read.parquet(cfg.statePath)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(alerts(direct).length == 3 && alerts(c) == alerts(direct))
+    assert(state(c) === Map("a" -> 100L, "b" -> 95L) && state(c) === state(direct))
+  }
+
   test("handshake: the frozen map derives from the batch staleness audit's output") {
     val cadence = StalenessWatch.cadenceOf(Monitoring.tableStaleness(spark, dir))
     assert(cadence.nonEmpty)

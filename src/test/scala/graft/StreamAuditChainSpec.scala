@@ -85,4 +85,13 @@ class StreamAuditChainSpec extends AnyFunSuite {
     assert((clean - victim) == (dirty - victim),
       "every untouched key's head is unaffected — replicas diff by |keys| hashes")
   }
+
+  test("start over the wire folds the envelopes' changelog to the batch chain heads") {
+    val base = tmp()
+    val c = Config(s"$base/wire", s"$base/state", s"$base/ckpt")
+    graft.sources.WireSource.publish(spark, dir, c.wirePath)
+    // the fixture's wire files all fit one trigger: batch 0, in order
+    TestSpark.drain(StreamAuditChain.start(spark, c))
+    assert(streamed(c, 0L).toSeq == batchOp().toSeq)
+  }
 }

@@ -75,6 +75,14 @@ class StreamBackfillSpec extends AnyFunSuite {
     assertParity(c, 1L)
   }
 
+  test("start over the wire reproduces both batch operators") {
+    val base = tmp()
+    val c = Config(s"$base/wire", s"$base/state", s"$base/ckpt")
+    graft.sources.WireSource.publish(spark, dir, c.wirePath)
+    TestSpark.drain(StreamBackfill.start(spark, c))
+    assertParity(c, 0L)
+  }
+
   test("a mid-stream report sees only its prefix (gaps close as offsets arrive)") {
     val c = cfg()
     val topics = wire.select("topic").distinct().collect().map(_.getString(0)).sorted

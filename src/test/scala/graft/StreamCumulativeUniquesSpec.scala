@@ -74,6 +74,20 @@ class StreamCumulativeUniquesSpec extends AnyFunSuite {
     assert(first.map(_.toString).toSeq === second.map(_.toString).toSeq)
   }
 
+  test("start over an event feed builds the board batch 0 over the same rows does") {
+    val base = tmp()
+    val c = Config(s"$base/state", s"$base/ckpt")
+    TestSpark.writeJsonFile(Tables.load(spark, dir, "events")
+      .select("event_id", "ts", "user_id", "event_type"), s"$base/events")
+    TestSpark.drain(StreamCumulativeUniques.start(spark, s"$base/events", c))
+    val direct = c.copy(statePath = s"$base/direct")
+    StreamCumulativeUniques.monitorBatch(spark, direct,
+      spark.read.schema(StreamCumulativeUniques.eventSchema).json(s"$base/events"), 0L)
+    def rows(cfg: Config) =
+      StreamCumulativeUniques.board(spark, cfg, 0L).collect().map(_.toString).toSeq
+    assert(rows(direct).nonEmpty && rows(c) == rows(direct))
+  }
+
   test("state is bounded: one sketch row per day, regardless of chunking") {
     val c = cfg()
     val ev = events()

@@ -49,6 +49,18 @@ class StreamLsnTrendSpec extends AnyFunSuite {
     }
   }
 
+  test("start over the wire reproduces the batch operator") {
+    val base = tmp()
+    val c = Config(s"$base/wire", s"$base/state", s"$base/ckpt")
+    graft.sources.WireSource.publish(spark, dir, c.wirePath)
+    TestSpark.drain(StreamLsnTrend.start(spark, c))
+    val streamed = StreamLsnTrend.trend(spark, c).where(col("batch_id") === 0L)
+      .drop("batch_id").orderBy("bucket").collect().map(_.toString).toSeq
+    val batch = Monitoring.lsnLatencyTrend(spark, dir).orderBy("bucket")
+      .collect().map(_.toString).toSeq
+    assert(batch.nonEmpty && streamed == batch)
+  }
+
   test("mid-stream report is the batch operator over the prefix") {
     val c = cfg()
     val w = org.apache.spark.sql.expressions.Window.orderBy("ts_ms", "lsn")

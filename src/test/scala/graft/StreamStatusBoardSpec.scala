@@ -60,6 +60,17 @@ class StreamStatusBoardSpec extends AnyFunSuite {
     assert(streamed(c, 1L).toSeq == batchOp().toSeq)
   }
 
+  test("start over an event feed builds the board batch 0 over the same rows does") {
+    val base = tmp()
+    val c = Config(s"$base/state", s"$base/ckpt")
+    TestSpark.writeJsonFile(events(), s"$base/events")
+    TestSpark.drain(StreamStatusBoard.start(spark, s"$base/events", c))
+    val direct = c.copy(statePath = s"$base/direct")
+    StreamStatusBoard.monitorBatch(spark, direct,
+      spark.read.schema(StreamStatusBoard.eventSchema).json(s"$base/events"), 0L)
+    assert(streamed(direct, 0L).nonEmpty && streamed(c, 0L).toSeq == streamed(direct, 0L).toSeq)
+  }
+
   test("the board is chunking-invariant: 1-batch and 5-batch replays agree") {
     val c1 = cfg(); val c5 = cfg()
     StreamStatusBoard.monitorBatch(spark, c1, events(), 0L)

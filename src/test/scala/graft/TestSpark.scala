@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Shared local session, test data dir and synthetic fixtures for all suites. */
 object TestSpark {
@@ -11,6 +12,15 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Run a started stream over everything its source holds, then stop it. */
+  def drain(q: StreamingQuery): Unit =
+    try q.processAllAvailable() finally q.stop()
+
+  /** `df` as one JSON-lines file under `path`: a file-source stream
+    * admits it as one micro-batch, batch 0. */
+  def writeJsonFile(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.json(path)
 
   /** Seeded Zipf(1)-skewed changelog (op, pk, ts, seq, value) of `n`
     * events over pks 1..`keys`: pk = floor((keys+1)^u) for a per-row
